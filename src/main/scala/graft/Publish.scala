@@ -1,6 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Atomic build-once publication for warehouse artifacts (VERDICT r11
   * item 1). The legacy pattern — `write.mode("overwrite")` straight into
@@ -62,6 +67,30 @@ object Publish {
     } finally {
       deleteTree(tmp) // no-op for the winner (tmp moved away)
       buildNanos.addAndGet(System.nanoTime() - t0); ()
+    }
+  }
+
+  /** Inferred schema per published `out`, stamped with its `_SUCCESS`
+    * marker's mtime and file key. */
+  private val schemas =
+    new ConcurrentHashMap[String, ((AnyRef, AnyRef), StructType)]()
+
+  /** Read the published parquet artifact at `out`. Its schema is inferred
+    * once per publication and passed to later reads with `.schema`, so a
+    * warm read starts no schema-inference job. Only the `StructType` is
+    * memoised: files are listed fresh on every read. Sound because a
+    * published artifact is immutable until it is deleted, and a
+    * republication writes a new marker, whose mtime and file key start a
+    * new memo entry. Throws when `out` has no `_SUCCESS` marker. */
+  def read(s: SparkSession, out: String): DataFrame = {
+    val attrs = Files.readAttributes(Paths.get(out, "_SUCCESS"), classOf[BasicFileAttributes])
+    val stamp = (attrs.lastModifiedTime, attrs.fileKey)
+    schemas.get(out) match {
+      case (`stamp`, schema) => s.read.schema(schema).parquet(out)
+      case _ =>
+        val inferred = s.read.parquet(out)
+        schemas.put(out, (stamp, inferred.schema))
+        inferred
     }
   }
 

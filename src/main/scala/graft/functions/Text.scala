@@ -54,29 +54,6 @@ object Text {
     inter.cast("double") / (size(a) + size(b) - inter)
   }
 
-  /** MinHash signature: k permutations h_i(x) = (a_i·x + b_i) mod p over
-    * xxhash64 shingle hashes. Returns array<long> of length k.
-    * Overflow of a_i·x wraps (Java long) — deterministic, fine for hashing. */
-  private val minhashP = 2147483647L // 2^31 - 1
-
-  /** Hash each shingle once, reduced mod p (xxhash64 is the expensive part
-    * of a minhash signature — materialize this as its OWN column so the k
-    * permutations read a bound reference instead of re-hashing k times). */
-  def shingleHashes(shingleArr: Column): Column =
-    transform(shingleArr, s => pmod(xxhash64(s), lit(minhashP)))
-
-  /** MinHash signature over pre-hashed shingles: k permutations
-    * h_i(x) = (a_i·x + b_i) mod p as cheap modular arithmetic
-    * (a_i·h' + b_i < 2^36 — no ANSI long overflow). */
-  def minhashSignature(hashedArr: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)), i => {
-      val a = i * 2L + 1L        // ≤ 2k+1
-      val b = i * 40503L + 17L
-      // running-min fold: no per-permutation permuted-array materialization
-      aggregate(hashedArr, lit(minhashP),
-        (mn, h) => least(mn, pmod(h * a + b, lit(minhashP))))
-    })
-
   /** LSH band buckets from a minhash signature: bands of `r` rows, bucket =
     * hash of the band's slice (+ band index so bands don't collide).
     * Returns array<struct<band:int, bucket:long>> for exploding. */

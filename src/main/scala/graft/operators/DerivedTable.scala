@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * trained profiles). Built once per source CONTENT (same invalidation
   * contract as [[Matview.factPath]]: the key covers size+mtime, so a
   * regenerated source rebuilds instead of serving stale data), then read
-  * back as plain parquet. Only input-side structures are persisted this
-  * way — never query results.
+  * back with [[graft.Publish.read]]. Only input-side structures are
+  * persisted this way — never query results.
   */
 object DerivedTable {
 
@@ -47,6 +47,6 @@ object DerivedTable {
       val w = build.write.mode("overwrite")
       (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(tmp)
     }
-    s.read.parquet(out)
+    graft.Publish.read(s, out)
   }
 }

@@ -30,12 +30,19 @@ import graft.{QueryDef, Tables}
   */
 object Flagship {
 
-  /** Value-range containment dimension: 10 buckets of width 50 covering
-    * events.value ∈ [0, 500) — the `community_boundaries` analog. */
+  /** Width of one value bucket; bucket `lo` covers `[lo, lo + 50)`. */
+  final val BucketWidth = 50
+
+  /** Lower bounds of the 10 value buckets covering events.value ∈ [0, 500),
+    * in `lo` order — the one definition of the bucket dimension. */
+  val bucketLos: Seq[Int] = 0 until 500 by BucketWidth
+
+  /** Value-range containment dimension over [[bucketLos]] — the
+    * `community_boundaries` analog. */
   def buckets(spark: SparkSession): DataFrame =
-    spark.range(0, 500, 50).select(
+    spark.range(bucketLos.head, bucketLos.last + BucketWidth, BucketWidth).select(
       col("id").cast("int").as("lo"),
-      (col("id") + 50).cast("int").as("hi"))
+      (col("id") + BucketWidth).cast("int").as("hi"))
 
   /** Daily aggregate of events — the `weather` daily-dimension analog
     * (reference: etl.py:86-105 fetch + queries.py:60-61 join key). */

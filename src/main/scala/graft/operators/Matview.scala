@@ -34,6 +34,33 @@ object Matview {
     out
   }
 
+  /** The published fact for `dir`, built on first use. */
+  def fact(s: SparkSession, dir: String): DataFrame =
+    graft.Publish.read(s, factPath(s, dir))
+
+  /** Every bucket in `lo` order; one missing from `perBucket` counts 0. */
+  private def allBuckets(s: SparkSession, perBucket: DataFrame): DataFrame =
+    Flagship.buckets(s)
+      .join(perBucket, Seq("lo", "hi"), "left")
+      .select(col("lo"), col("hi"),
+        coalesce(col("cnt"), lit(0L)).as("n_rows"), col("avg_value"))
+      .orderBy(col("lo"))
+
+  /** Per-(day, bucket) partials of the fact: row count and raw value sum. */
+  private def partials(f: DataFrame): DataFrame =
+    f.filter(col("lo").isNotNull)
+      .groupBy(col("day"), col("lo"), col("hi"))
+      .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_value"))
+
+  /** Serve buckets from partials; avg is re-derived as sum(sum)/sum(cnt),
+    * the shape Spark's own aggregate partials take. That sums in another
+    * order than the oracle's avg; `roundOut`'s 1e-9 nudge keeps the drift
+    * off half-ulp rounding boundaries. */
+  private def combine(s: SparkSession, partials: DataFrame): DataFrame =
+    allBuckets(s, partials.groupBy(col("lo"), col("hi"))
+      .agg(sum(col("cnt")).as("cnt"),
+        Num.roundOut(sum(col("sum_value")) / sum(col("cnt")), 4).as("avg_value")))
+
   /** Shared oracle: the flagship aggregate recomputed from BASE tables —
     * q25 (fact) and q52 (aggregate matview) must both reproduce it; only
     * the physical serving path differs (reference configs 3 vs 4). */
@@ -59,16 +86,10 @@ object Matview {
     // tables declaratively — results must be identical, only the physical
     // path differs.
     QueryDef("q25_fact_serving", servingOracle) { (s, d) =>
-      val fact = s.read.parquet(factPath(s, d))
-      val perBucket = fact.filter(col("lo").isNotNull)
+      allBuckets(s, fact(s, d).filter(col("lo").isNotNull)
         .groupBy(col("lo"), col("hi"))
         .agg(count(lit(1)).as("cnt"),
-          Num.roundOut(avg(col("value")), 4).as("avg_value"))
-      Flagship.buckets(s)
-        .join(perBucket, Seq("lo", "hi"), "left")
-        .select(col("lo"), col("hi"),
-          coalesce(col("cnt"), lit(0L)).as("n_rows"), col("avg_value"))
-        .orderBy(col("lo"))
+          Num.roundOut(avg(col("value")), 4).as("avg_value")))
     },
 
     // The AGGREGATE matview: GENERALIZES the reference's matview config
@@ -79,29 +100,12 @@ object Matview {
     // combines ~days×buckets partial rows — O(dimensions), independent of
     // event count: at 100 TB the base scan is off the serving path
     // entirely, and the matview is incrementally maintainable (append a
-    // day's partials, never recompute history). avg is re-derived as
-    // sum(sum)/sum(cnt) — partial aggregation states, the same shape
-    // Spark's own ObjectHashAggregate partials take. Rounding hazard
-    // (known class, see MEMORY oracle-parity notes): combining partials
-    // changes FP accumulation order vs the oracle's sequential avg; the
-    // 1e-9 nudge in roundOut shields half-ulp boundaries — if it ever
-    // flakes, sum in a deterministic bucket order or widen the epsilon.
+    // day's partials, never recompute history).
     QueryDef("q52_agg_matview", servingOracle) { (s, d) =>
-      val mv = DerivedTable(s, d, "events", "aggmv") {
-        s.read.parquet(factPath(s, d))
-          .filter(col("lo").isNotNull)
-          .groupBy(col("day"), col("lo"), col("hi"))
-          .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_value"))
-          .coalesce(1) // dims-sized (days×buckets) — one file, no small-file tax
-      }
-      val perBucket = mv.groupBy(col("lo"), col("hi"))
-        .agg(sum(col("cnt")).as("cnt"),
-          Num.roundOut(sum(col("sum_value")) / sum(col("cnt")), 4).as("avg_value"))
-      Flagship.buckets(s)
-        .join(perBucket, Seq("lo", "hi"), "left")
-        .select(col("lo"), col("hi"),
-          coalesce(col("cnt"), lit(0L)).as("n_rows"), col("avg_value"))
-        .orderBy(col("lo"))
+      combine(s, DerivedTable(s, d, "events", "aggmv") {
+        // dims-sized (days×buckets) — one file, no small-file tax
+        partials(fact(s, d)).coalesce(1)
+      })
     },
 
     // INCREMENTAL matview refresh: the maintenance story q52's design
@@ -117,26 +121,14 @@ object Matview {
     // st02-style upsert first, and its (day, bucket) partials are the
     // delta — the same bounded-work shape.
     QueryDef("q55_matview_refresh", servingOracle) { (s, d) =>
-      def partials(f: DataFrame): DataFrame =
-        f.filter(col("lo").isNotNull)
-          .groupBy(col("day"), col("lo"), col("hi"))
-          .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_value"))
       val stale = DerivedTable(s, d, "events", "aggmv_stale") {
-        partials(s.read.parquet(factPath(s, d))
+        partials(fact(s, d)
           .filter(col("day") <= lit("2024-01-25").cast("date")))
           .coalesce(1)
       }
-      val delta = partials(s.read.parquet(factPath(s, d))
+      val delta = partials(fact(s, d)
         .filter(col("day") > lit("2024-01-25").cast("date")))
-      val refreshed = stale.unionByName(delta)
-      val perBucket = refreshed.groupBy(col("lo"), col("hi"))
-        .agg(sum(col("cnt")).as("cnt"),
-          Num.roundOut(sum(col("sum_value")) / sum(col("cnt")), 4).as("avg_value"))
-      Flagship.buckets(s)
-        .join(perBucket, Seq("lo", "hi"), "left")
-        .select(col("lo"), col("hi"),
-          coalesce(col("cnt"), lit(0L)).as("n_rows"), col("avg_value"))
-        .orderBy(col("lo"))
+      combine(s, stale.unionByName(delta))
     },
 
     // JOIN-DELTA incremental view maintenance WITH RETRACTIONS — the

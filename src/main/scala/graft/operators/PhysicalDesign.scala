@@ -78,7 +78,7 @@ object PhysicalDesign {
   /** The pruned-read plan (shared by the query and PhysicalDesignSpec,
     * which asserts the partition filters actually prune the scan). */
   def prunedDaily(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(partitionedEventsPath(s, dir))
+    graft.Publish.read(s, partitionedEventsPath(s, dir))
       .filter(col("day").between(lit("2024-01-10").cast("date"),
         lit("2024-01-19").cast("date")))
       .groupBy(col("event_type"))
@@ -198,7 +198,7 @@ object PhysicalDesign {
       // Read with per-file partitions (splits already coalesce small files
       // up to maxPartitionBytes; coalesce(n) then merges down to the
       // target count without an exchange).
-      s.read.parquet(frag).coalesce(n)
+      graft.Publish.read(s, frag).coalesce(n)
         .write.mode("overwrite").parquet(t)
     }
     out
@@ -250,7 +250,7 @@ object PhysicalDesign {
         |       round(1e-9 + sum(value), 4) AS sum_value,
         |       count(DISTINCT user_id) AS n_users
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
-      s.read.parquet(compactedEventsPath(s, d))
+      graft.Publish.read(s, compactedEventsPath(s, d))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           Num.roundOut(sum(col("value")), 4).as("sum_value"),
@@ -270,7 +270,7 @@ object PhysicalDesign {
         |       min(za) AS min_day, max(za) AS max_day,
         |       min(zb) AS min_vb, max(zb) AS max_vb
         |FROM z GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      s.read.parquet(zorderEventsPath(s, d))
+      graft.Publish.read(s, zorderEventsPath(s, d))
         .groupBy(shiftright(col("z"), 10).as("z_tile"))
         .agg(count(lit(1)).as("n"),
           min(col("za")).as("min_day"), max(col("za")).as("max_day"),

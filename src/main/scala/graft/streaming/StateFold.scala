@@ -140,7 +140,10 @@ private[graft] object StateFold {
   }
 
   /** Run one WRITE action with AQE enabled, restoring the session's
-    * setting after. The streaming clone disables AQE session-wide
+    * setting after. `body` must be an EAGER action — a write, or an eager
+    * `localCheckpoint` — because the setting is restored as soon as `body`
+    * returns: a lazy frame built inside it executes later, without AQE.
+    * The streaming clone disables AQE session-wide
     * (job-count hygiene); state-log writes opt back in so their output
     * file count follows partition BYTES. foreachBatch bodies are
     * single-threaded per query and the clone session is per-query, so

@@ -66,18 +66,19 @@ object Streams {
     // paid per stage per batch. On a cluster the same reasoning holds
     // (state partitioning is fixed for the checkpoint's life); re-enable
     // per query only if a serve-side join needs runtime skew handling.
-    ss.conf.set("spark.sql.adaptive.enabled", "false")
+    val aqe = "spark.sql.adaptive.enabled"
+    val servingAqe = ss.conf.get(aqe)
+    ss.conf.set(aqe, "false")
     val out = body(ss)
     // body() has run the stream to convergence (every fold action above
     // executed AQE-off); what escapes is the SERVE plan, which executes
     // lazily after this returns. The serve is one data-sized analytics
-    // query — exactly where AQE belongs (skew-split/coalescing on the
-    // banded candidate joins, the main batch session's own default) —
-    // so flip it back on for the clone before handing the plan out
-    // (r17: st39's banded serve lost 1.26× when the fold's AQE-off
-    // blanket covered it too). State-log writes inside the fold opt
-    // back in per action via StateFold.withWriteAqe.
-    ss.conf.set("spark.sql.adaptive.enabled", "true")
+    // query, planned like any batch query of the session: the clone gets
+    // back the AQE setting it started with (on by default, where it
+    // skew-splits/coalesces the banded candidate joins; off when the
+    // session was built with it off). State-log writes inside the fold
+    // opt back in per action via StateFold.withWriteAqe.
+    ss.conf.set(aqe, servingAqe)
     out
   }
 

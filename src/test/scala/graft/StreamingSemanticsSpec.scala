@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -145,5 +147,26 @@ class StreamingSemanticsSpec extends AnyFunSuite {
       s"shuffle.partitions leaked: ${spark.conf.get(k)} != $before")
     assert(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong") == nanosBefore,
       "nanosAsLong leaked out of the streaming scope")
+  }
+
+  test("the streaming clone serves with the AQE setting it started with") {
+    val aqe = "spark.sql.adaptive.enabled"
+    def adaptive(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec]
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    val parent = SparkSession.builder().config(aqe, "false").create()
+    try {
+      val off = Streams.streamingDaily(parent, sf0_001)
+      assert(off.sparkSession.conf.get(aqe) == "false")
+      assert(!adaptive(off), "a parent built with AQE off got an adaptive serve plan")
+      assert(off.count() > 0)
+    } finally {
+      active.foreach(SparkSession.setActiveSession)
+      default.foreach(SparkSession.setDefaultSession)
+    }
+    // the default session keeps AQE on for the serve plan
+    val on = Streams.streamingDaily(spark, sf0_001)
+    assert(on.sparkSession.conf.get(aqe) == "true")
+    assert(adaptive(on))
   }
 }
