@@ -39,6 +39,10 @@ object Bench {
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
+    // a failed query stays visible on stderr (stdout carries only the two
+    // JSON lines); the timed loop still reports it as -1.0
+    def failed(name: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
 
     // Warmup: one untimed pass of every query at the benchmark SF —
     // absorbs JVM/classloader/codegen startup, populates the OS page
@@ -62,9 +66,9 @@ object Bench {
     // without re-measurement).
     val wb0 = Publish.buildSeconds
     val warmupSec = time {
-      selected.values.foreach { fn =>
+      selected.foreach { case (name, fn) =>
         try run(fn(spark, sfDir))
-        catch { case scala.util.control.NonFatal(_) => () } // OOM etc must fail loudly
+        catch { case scala.util.control.NonFatal(e) => failed(name, e) } // OOM etc must fail loudly
       }
     }
     val warmupBuild = Publish.buildSeconds - wb0
@@ -92,7 +96,7 @@ object Bench {
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val b0 = Publish.buildSeconds
       val t = try (1 to 2).map(_ => time { run(fn(spark, sfDir)) }).min
-        catch { case scala.util.control.NonFatal(_) => -1.0 }
+        catch { case scala.util.control.NonFatal(e) => failed(name, e); -1.0 }
       (name, t, Publish.buildSeconds - b0)
     }
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }

@@ -28,30 +28,20 @@ object Streams {
   /** Run `body` against a CLONED session (shared SparkContext and table
     * cache, ISOLATED SQL conf — `SparkSession.newSession`) carrying the
     * streaming-scoped confs: the events table's nanos-ts flag plus a LOWER
-    * shuffle-partition count. Every stateful streaming operator maintains
-    * one state store per shuffle partition per micro-batch (a
-    * stream-stream join keeps FOUR per partition), and the store
-    * checkpoint/commit overhead is per store, not per row — at 32
-    * partitions the fixed cost dominates the fixture-scale state. 8
-    * partitions is the per-NODE sizing; on a real cluster this knob is
-    * executors×cores, set once at query start (state partitioning is
-    * fixed for the life of a streaming checkpoint — it must be chosen for
-    * the target scale up front, which is why it's a per-query setting
-    * rather than the session's batch default). Cloning means a batch
-    * query running CONCURRENTLY on the parent session can never observe
-    * these confs (ADVICE r05); builder-time options (timezone, AQE)
-    * propagate to the clone via the session's initial options. */
-  private def withStreamingConfs[T](s: SparkSession)(body: SparkSession => T): T =
-    withStreamingConfs(s, 8)(body)
-
-  /** `partitions` sizes the state-store count (fixed per checkpoint).
-    * Stream-STREAM joins keep FOUR stores per partition per micro-batch
-    * (left/right × keyToNumValues/keyWithIndexToValue), so their
-    * per-partition fixed commit cost is ~4× a plain stateful agg — st04/
-    * st08 size at 4 partitions where single-state operators use 8. Same
-    * rule on a cluster: divide the per-node budget by the operator's
-    * stores-per-partition factor. */
-  private def withStreamingConfs[T](s: SparkSession, partitions: Int)(
+    * shuffle-partition count. Cloning means a batch query running
+    * CONCURRENTLY on the parent session can never observe these confs;
+    * builder-time options (timezone, AQE) propagate to the clone via the
+    * session's initial options.
+    *
+    * `partitions` sizes the state-store count, which is fixed for the
+    * life of a streaming checkpoint; store checkpoint/commit cost is per
+    * store, not per row. Invariant: 8 partitions (the per-node sizing)
+    * for an operator with one state store per partition, 4 for a
+    * stream-stream join, which keeps four stores per partition
+    * (left/right × keyToNumValues/keyWithIndexToValue). On a cluster the
+    * base is executors × cores, lowered the same way for a multi-store
+    * operator. */
+  private def withStreamingConfs[T](s: SparkSession, partitions: Int = 8)(
       body: SparkSession => T): T = {
     val ss = s.newSession()
     ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -80,6 +70,33 @@ object Streams {
     // opt back in per action via StateFold.withWriteAqe.
     ss.conf.set(aqe, servingAqe)
     out
+  }
+
+  /** The stream source of every staged query: `stage`'s parquet files
+    * under the stage's own schema, one file per micro-batch, so a split
+    * stage replays one micro-batch per slice, in file order. */
+  private[graft] def replay(ss: SparkSession, stage: String): DataFrame =
+    ss.readStream.schema(ss.read.parquet(stage).schema)
+      .option("maxFilesPerTrigger", "1").parquet(stage)
+
+  /** The fold sink: run `fold` on every micro-batch of `stream` until all
+    * available input is processed. The query is stopped on every exit, so
+    * a failing fold surfaces to the caller and leaves no active query. */
+  private[graft] def drain(stream: DataFrame)(fold: DataFrame => Unit): Unit = {
+    val q = stream.writeStream.outputMode(OutputMode.Update())
+      .foreachBatch { (batch: DataFrame, _: Long) => fold(batch) }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** The memory sink: run `stream` to convergence in `mode` and return
+    * the sink's rows, a uniquely named table of the stream's session. */
+  private[graft] def collect(stream: DataFrame, mode: OutputMode): DataFrame = {
+    val name = s"stream_sink_${sinkId.incrementAndGet()}"
+    val q = stream.writeStream.outputMode(mode)
+      .format("memory").queryName(name).start()
+    try q.processAllAvailable() finally q.stop()
+    stream.sparkSession.table(name)
   }
 
   /** Atomically publish a staged micro-batch directory: each slice is
@@ -165,18 +182,20 @@ object Streams {
       src, Seq("events_a.parquet", "events_b.parquet"))
   }
 
-  /** Stage events SPLIT in two disjoint halves (by event_id parity, two
-    * files → two micro-batches with maxFilesPerTrigger=1) so incremental
-    * aggregate maintenance actually merges across batches. Written
-    * through Spark, so the staged `ts` keeps whatever encoding the source
-    * read produced (long nanos or NTZ micros) — consumers normalize via
-    * [[graft.Tables.normalizeTs]]. */
-  private[graft] def stageEventsSplit(s: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(dir, "events.parquet")
+  /** Stage `table` SPLIT in two disjoint halves by the parity of its
+    * integer `key` (two files → two micro-batches under [[replay]]), so
+    * incremental folds actually merge across batches. Published at
+    * `graft_stream_<prefix>_v1_<content key of table.parquet>`. Written
+    * through Spark, so a staged events `ts` keeps whatever encoding the
+    * source read produced (long nanos or NTZ micros) — consumers
+    * normalize via [[graft.Tables.normalizeTs]]. */
+  private[graft] def stageSplit(s: SparkSession, dir: String, table: String,
+      key: String, prefix: String): String = {
+    val src = java.nio.file.Paths.get(dir, s"$table.parquet")
     stageSlices(java.nio.file.Paths.get(graft.Warehouse.path(
-      s"graft_stream_split_v1_${graft.ContentKey.key(src)}")),
-      Seq(0, 1).map(par => graft.Tables.table(s, dir, "events")
-        .filter(col("event_id") % 2 === par)))()
+      s"graft_stream_${prefix}_v1_${graft.ContentKey.key(src)}")),
+      Seq(0, 1).map(par => graft.Tables.table(s, dir, table)
+        .filter(col(key) % 2 === par)))()
   }
 
   /** Stage EVENTS as three TIME-ORDERED slices (date terciles by pure
@@ -185,7 +204,7 @@ object Streams {
     * time in order across micro-batches. st23's cross-batch
     * last-event-per-user state is only correct under time-ordered
     * arrival — which is exactly how a production event log lands.
-    * Content-keyed like [[stageEventsSplit]]. */
+    * Content-keyed like [[stageSplit]]. */
   private[graft] def stageEventsTimeSplit(s: SparkSession, dir: String): String = {
     val src = java.nio.file.Paths.get(dir, "events.parquet")
     val ev = Tables.events(s, dir) // ts normalized to micros on disk
@@ -225,58 +244,6 @@ object Streams {
     }
   }
 
-  /** Stage DOCUMENTS split in two disjoint halves (by doc_id parity, two
-    * files → two micro-batches with maxFilesPerTrigger=1) — st10's
-    * streaming ingest source. Content-keyed like [[stageEventsSplit]]. */
-  private[graft] def stageDocumentsSplit(s: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(dir, "documents.parquet")
-    stageSlices(java.nio.file.Paths.get(graft.Warehouse.path(
-      s"graft_stream_docsplit_v1_${graft.ContentKey.key(src)}")),
-      Seq(0, 1).map(par => graft.Tables.documents(s, dir)
-        .filter(col("doc_id") % 2 === par)))()
-  }
-
-  /** Stage ORDERS split in two disjoint halves (by o_orderkey parity) —
-    * st26's streaming ingest source. Content-keyed like the others. */
-  private[graft] def stageOrdersSplit(s: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(dir, "orders.parquet")
-    stageSlices(java.nio.file.Paths.get(graft.Warehouse.path(
-      s"graft_stream_ordsplit_v1_${graft.ContentKey.key(src)}")),
-      Seq(0, 1).map(par => graft.Tables.orders(s, dir)
-        .filter(col("o_orderkey") % 2 === par)))()
-  }
-
-  /** Stage PART split in two disjoint halves (by p_partkey parity) —
-    * st28's streaming ingest source. Content-keyed like the others. */
-  private[graft] def stagePartSplit(s: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(dir, "part.parquet")
-    stageSlices(java.nio.file.Paths.get(graft.Warehouse.path(
-      s"graft_stream_partsplit_v1_${graft.ContentKey.key(src)}")),
-      Seq(0, 1).map(par => graft.Tables.part(s, dir)
-        .filter(col("p_partkey") % 2 === par)))()
-  }
-
-  /** Stage EMBEDDINGS split in two disjoint halves (by vec_id parity) —
-    * st21's streaming ingest source. Content-keyed like the others. */
-  private[graft] def stageEmbeddingsSplit(s: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(dir, "embeddings.parquet")
-    stageSlices(java.nio.file.Paths.get(graft.Warehouse.path(
-      s"graft_stream_vecsplit_v1_${graft.ContentKey.key(src)}")),
-      Seq(0, 1).map(par => graft.Tables.embeddings(s, dir)
-        .filter(col("vec_id") % 2 === par)))()
-  }
-
-  /** Delete a derived output directory before a non-idempotent rebuild. */
-  private def resetDir(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      val l = java.nio.file.Files.walk(p)
-      try l.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally l.close()
-    }
-  }
-
   /** Streaming exact dedup: `dropDuplicates(event_id)` over a stream that
     * replays every event twice (two micro-batches). The first batch seeds
     * the dedup state; the replay batch must be suppressed ENTIRELY by it —
@@ -288,17 +255,9 @@ object Streams {
     * StreamingSemanticsSpec pins on a crafted two-batch feed. */
   def streamingDedupDaily(s: SparkSession, dir: String): DataFrame =
     withStreamingConfs(s) { ss =>
-      val batch = Tables.table(ss, dir, "events")
-      val raw = ss.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stageEventsDuplicated(dir))
-      val deduped = Tables.normalizeTs(raw)
+      val deduped = Tables.normalizeTs(replay(ss, stageEventsDuplicated(dir)))
         .dropDuplicates("event_id")
-      val name = s"st03_sink_${sinkId.incrementAndGet()}"
-      val q = deduped.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(name)
+      collect(deduped, OutputMode.Append())
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           Num.roundOut(sum(col("value")), 4).as("sum_value"))
@@ -315,9 +274,7 @@ object Streams {
     * oracle asserts. */
   def streamingAttribution(s: SparkSession, dir: String): DataFrame =
     withStreamingConfs(s, 4) { ss => // stream-stream: 4 stores/partition
-      val batch = Tables.table(ss, dir, "events")
-      val raw = Tables.normalizeTs(
-        ss.readStream.schema(batch.schema).parquet(stageEvents(dir)))
+      val raw = Tables.normalizeTs(replay(ss, stageEvents(dir)))
       val clicks = raw.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
           col("ts").as("click_ts"))
@@ -330,33 +287,24 @@ object Streams {
         col("user_id") === col("p_user") &&
           col("purchase_ts") >= col("click_ts") &&
           col("purchase_ts") <= col("click_ts") + expr("INTERVAL 10 MINUTES"))
-      val name = s"st04_sink_${sinkId.incrementAndGet()}"
-      val q = joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(name)
+      collect(joined, OutputMode.Append())
         .select(col("user_id"), col("click_id"), col("purchase_id"))
         .orderBy(col("click_id"), col("purchase_id"))
     }
 
   /** Daily per-type counts computed by a genuine streaming query over the
-    * events parquet (schema from a batch probe; nanos ts normalized the
-    * same way as [[graft.Tables.events]]). */
+    * staged events parquet (nanos ts normalized the same way as
+    * [[graft.Tables.events]]). */
   def streamingDaily(s: SparkSession, dir: String): DataFrame =
     withStreamingConfs(s) { ss =>
-      val batch = Tables.table(ss, dir, "events") // schema probe (encoding-dependent ts)
-      val raw = ss.readStream.schema(batch.schema).parquet(stageEvents(dir))
-      val events = Tables.normalizeTs(raw) // schema-adaptive: see Tables.normalizeTs
+      // schema-adaptive: see Tables.normalizeTs
+      val events = Tables.normalizeTs(replay(ss, stageEvents(dir)))
       val agg = events
         .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"), Num.roundOut(sum(col("value")), 4).as("sum_value"))
         .select(to_date(col("w.start")).as("day"), col("event_type"),
           col("n"), col("sum_value"))
-      val name = s"st01_sink_${sinkId.incrementAndGet()}"
-      val q = agg.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(name).orderBy(col("day"), col("event_type"))
+      collect(agg, OutputMode.Complete()).orderBy(col("day"), col("event_type"))
     }
 
   /** Streaming session-window aggregation (SURVEY.md §2.9): the same
@@ -364,9 +312,7 @@ object Streams {
     * stream state — sessions extend and MERGE as events arrive. */
   def streamingSessions(s: SparkSession, dir: String): DataFrame =
     withStreamingConfs(s) { ss =>
-      val batch = Tables.table(ss, dir, "events")
-      val raw = ss.readStream.schema(batch.schema).parquet(stageEvents(dir))
-      val events = Tables.normalizeTs(raw)
+      val events = Tables.normalizeTs(replay(ss, stageEvents(dir)))
       val agg = events
         .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
         .agg(count(lit(1)).as("n"),
@@ -375,11 +321,8 @@ object Streams {
           unix_micros(col("w.start")).as("session_start"),
           unix_micros(col("w.end")).as("session_end"),
           col("n"), col("sum_value"))
-      val name = s"st05_sink_${sinkId.incrementAndGet()}"
-      val q = agg.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(name).orderBy(col("user_id"), col("session_start"))
+      collect(agg, OutputMode.Complete())
+        .orderBy(col("user_id"), col("session_start"))
     }
 
   /** Watermarked append-mode windowed aggregation over a file-source
@@ -417,21 +360,18 @@ object Streams {
     * files byte-identical. */
   def incrementalUpsert(s: SparkSession, srcDir: String, factDir: String,
       keys: Seq[String], ordering: Seq[org.apache.spark.sql.Column]): Unit = {
-    val schema = s.read.parquet(srcDir).schema
-    val q = s.readStream.schema(schema).parquet(srcDir)
-      .writeStream.outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val parts = KeyedFold.touched(batch, keys)
-        val existing = KeyedFold.readParts(spark, factDir, parts, batch)
-        val merged = graft.operators.Merge
-          .upsert(existing, batch, keys, ordering)
-          .localCheckpoint() // sever lineage from the files being overwritten
-        KeyedFold.overwriteTouched(merged, keys, factDir, parts)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    // no one-file cap (unlike `replay`): every file already in `srcDir`
+    // merges in one micro-batch
+    val src = s.readStream.schema(s.read.parquet(srcDir).schema).parquet(srcDir)
+    drain(src) { batch =>
+      val spark = batch.sparkSession
+      val parts = KeyedFold.touched(batch, keys)
+      val existing = KeyedFold.readParts(spark, factDir, parts, batch)
+      val merged = graft.operators.Merge
+        .upsert(existing, batch, keys, ordering)
+        .localCheckpoint() // sever lineage from the files being overwritten
+      KeyedFold.overwriteTouched(merged, keys, factDir, parts)
+    }
   }
 
   // ---- stateful sessionization (mapGroupsWithState) ----
@@ -569,35 +509,28 @@ object Streams {
         |       count(*) AS n, round(1e-9 + sum(value), 4) AS sum_value
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageEventsSplit(ss, d)
+        val stage = stageSplit(ss, d, "events", "event_id", "split")
         val mvDir = java.nio.file.Paths.get(graft.Scratch.path(
           s"graft_staggmv_v1_${graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}"),
           "mv").toString
-        resetDir(mvDir)
+        graft.Publish.deleteTree(java.nio.file.Paths.get(mvDir))
         val merge = (df: DataFrame) => df
           .groupBy(col("day"), col("event_type"))
           .agg(sum(col("n")).as("n"), sum(col("sv")).as("sv"))
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            val part = Tables.normalizeTs(batch)
-              .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-              .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
-            StateFold.append(part, mvDir)
-            // deliberately LOW threshold (1 — AQE coalesces the tiny
-            // fixture deltas to one file per append): this family
-            // exercises the in-stream compaction path, so the
-            // answer-preservation contract is oracle-covered, not just
-            // unit-tested — Round13Spec pins that a compact event
-            // actually fired here
-            StateFold.maybeCompact(spark, mvDir, maxFiles = 1)(merge)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          val part = Tables.normalizeTs(batch)
+            .groupBy(to_date(col("ts")).as("day"), col("event_type"))
+            .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
+          StateFold.append(part, mvDir)
+          // deliberately LOW threshold (1 — AQE coalesces the tiny
+          // fixture deltas to one file per append): this family
+          // exercises the in-stream compaction path, so the
+          // answer-preservation contract is oracle-covered, not just
+          // unit-tested — Round13Spec pins that a compact event
+          // actually fired here
+          StateFold.maybeCompact(spark, mvDir, maxFiles = 1)(merge)
+        }
         merge(ss.read.parquet(mvDir))
           .select(col("day"), col("event_type"), col("n"),
             Num.roundOut(col("sv"), 4).as("sum_value"))
@@ -628,20 +561,13 @@ object Streams {
         val dim = Tables.events(ss, d)
           .groupBy(to_date(col("ts")).as("day"))
           .agg(Num.roundOut(avg(col("value")), 4).as("day_avg"))
-        val batch = Tables.table(ss, d, "events")
-        val raw = Tables.normalizeTs(
-          ss.readStream.schema(batch.schema).parquet(stageEvents(d)))
-        val agg = raw
+        val agg = Tables.normalizeTs(replay(ss, stageEvents(d)))
           .join(broadcast(dim), to_date(col("ts")) === col("day"))
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             sum(when(col("value") > col("day_avg"), 1).otherwise(0))
               .cast("long").as("n_above"))
-        val name = s"st07_sink_${sinkId.incrementAndGet()}"
-        val q = agg.writeStream.outputMode(OutputMode.Complete())
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-        ss.table(name).orderBy(col("event_type"))
+        collect(agg, OutputMode.Complete()).orderBy(col("event_type"))
       }
     },
 
@@ -686,9 +612,7 @@ object Streams {
         |WHERE epoch_us(CAST(c.click_ts AS TIMESTAMP)) < mx.m - 4200000000
         |ORDER BY click_id, purchase_id""".stripMargin) { (s, d) =>
       withStreamingConfs(s, 4) { ss => // stream-stream: 4 stores/partition
-        val batch = Tables.table(ss, d, "events")
-        val raw = Tables.normalizeTs(
-          ss.readStream.schema(batch.schema).parquet(stageEvents(d)))
+        val raw = Tables.normalizeTs(replay(ss, stageEvents(d)))
         val clicks = raw.filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id"),
             col("ts").as("click_ts"))
@@ -702,10 +626,7 @@ object Streams {
             col("purchase_ts") >= col("click_ts") &&
             col("purchase_ts") <= col("click_ts") + expr("INTERVAL 10 MINUTES"),
           "left_outer")
-        val name = s"st08_sink_${sinkId.incrementAndGet()}"
-        val q = joined.writeStream.outputMode(OutputMode.Append())
-          .format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
+        val emitted = collect(joined, OutputMode.Append())
         // the GLOBAL watermark is the MIN across both inputs' watermark
         // columns (multipleWatermarkPolicy=min): the horizon only reaches
         // as far as the SLOWER side has seen events
@@ -714,7 +635,7 @@ object Streams {
             max(when(col("event_type") === "click", unix_micros(col("ts")))),
             max(when(col("event_type") === "purchase", unix_micros(col("ts")))))
             .as("m")).head().getLong(0) - 4200000000L
-        ss.table(name)
+        emitted
           .filter(unix_micros(col("click_ts")) < cutoff)
           .select(col("user_id"), col("click_id"), col("purchase_id"))
           .orderBy(col("click_id"), col("purchase_id"))
@@ -773,43 +694,36 @@ object Streams {
         |                             THEN value END), 4) AS p90_sample
         |FROM sq GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageEventsSplit(ss, d)
+        val stage = stageSplit(ss, d, "events", "event_id", "split")
         val smpDir = java.nio.file.Paths.get(graft.Scratch.path(
           s"graft_stquant_v1_${graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}"),
           "sample").toString
-        resetDir(smpDir)
+        graft.Publish.deleteTree(java.nio.file.Paths.get(smpDir))
         def bottomK(df: DataFrame): DataFrame = df
           .withColumn("rn", row_number().over(
             org.apache.spark.sql.expressions.Window
               .partitionBy(col("event_type"))
               .orderBy(col("pri"), col("event_id"))))
           .filter(col("rn") <= 64).drop("rn")
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): the batch's own bottom-k APPENDS to the
-            // log; the k-vs-k merge is the read-time/compaction bottomK —
-            // legal because bottom-k under a total order is a mergeable
-            // fold (top-k(A∪B) = top-k(top-k(A) ∪ top-k(B)))
-            val local = bottomK(batch
-              .select(col("event_type"), col("event_id"), col("value"))
-              .filter(col("value").isNotNull)
-              .withColumn("a", expr("event_id & 4294967295"))
-              .withColumn("a",
-                expr("(shiftright(a, 16) ^ a) * 73244475 & 4294967295"))
-              .withColumn("a",
-                expr("(shiftright(a, 16) ^ a) * 73244475 & 4294967295"))
-              .withColumn("pri", expr("shiftright(a, 16) ^ a"))
-              .drop("a"))
-            StateFold.append(local, smpDir)
-            StateFold.maybeCompact(spark, smpDir)(bottomK)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): the batch's own bottom-k APPENDS to the
+          // log; the k-vs-k merge is the read-time/compaction bottomK —
+          // legal because bottom-k under a total order is a mergeable
+          // fold (top-k(A∪B) = top-k(top-k(A) ∪ top-k(B)))
+          val local = bottomK(batch
+            .select(col("event_type"), col("event_id"), col("value"))
+            .filter(col("value").isNotNull)
+            .withColumn("a", expr("event_id & 4294967295"))
+            .withColumn("a",
+              expr("(shiftright(a, 16) ^ a) * 73244475 & 4294967295"))
+            .withColumn("a",
+              expr("(shiftright(a, 16) ^ a) * 73244475 & 4294967295"))
+            .withColumn("pri", expr("shiftright(a, 16) ^ a"))
+            .drop("a"))
+          StateFold.append(local, smpDir)
+          StateFold.maybeCompact(spark, smpDir)(bottomK)
+        }
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("event_type"))
         bottomK(ss.read.parquet(smpDir))
@@ -853,54 +767,48 @@ object Streams {
     QueryDef("st10_stream_neardup",
       graft.operators.Dedup.x39OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val root = graft.Scratch.path(
           s"graft_stneardup_v1_${graft.ContentKey.key(
             java.nio.file.Paths.get(d, "documents.parquet"))}")
         val sigDir = s"$root/sigs"
         val bandDir = s"$root/bands"
         val pairDir = s"$root/pairs"
-        Seq(sigDir, bandDir, pairDir).foreach(resetDir)
+        Seq(sigDir, bandDir, pairDir).map(java.nio.file.Paths.get(_))
+          .foreach(graft.Publish.deleteTree)
         def exists(p: String) =
           java.nio.file.Files.exists(java.nio.file.Paths.get(p, "_SUCCESS"))
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            val sigs = graft.operators.Dedup.portableSigs(batch)
-              .localCheckpoint()
-            val newB = graft.operators.Dedup.bandedSig(sigs).localCheckpoint()
-            val oldB =
-              if (exists(bandDir)) spark.read.parquet(bandDir)
-              else newB.limit(0)
-            val union = oldB.unionByName(newB)
-            // work guard: buckets already past the cap can only grow —
-            // never generate pairs from them again
-            val small = union.groupBy(col("band"), col("bucket"))
-              .agg(count(lit(1)).as("bsz")).filter(col("bsz") <= 100)
-              .select(col("band"), col("bucket"))
-            val pairs = newB.as("a")
-              .join(union.join(small, Seq("band", "bucket")).as("b"),
-                col("a.band") === col("b.band") &&
-                  col("a.bucket") === col("b.bucket") &&
-                  col("a.doc_id") =!= col("b.doc_id"))
-              .select(
-                least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-                greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
-                col("a.band").as("band"), col("a.bucket").as("bucket"))
-              .distinct()
-            // append order matters: pairs (derived from the band state
-            // just read) land first; only then do the new bands/sigs
-            // extend the state dirs (the st09 no-self-overwrite rule)
-            StateFold.append(pairs, pairDir)
-            StateFold.append(newB, bandDir)
-            StateFold.append(sigs, sigDir)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          val sigs = graft.operators.Dedup.portableSigs(batch)
+            .localCheckpoint()
+          val newB = graft.operators.Dedup.bandedSig(sigs).localCheckpoint()
+          val oldB =
+            if (exists(bandDir)) spark.read.parquet(bandDir)
+            else newB.limit(0)
+          val union = oldB.unionByName(newB)
+          // work guard: buckets already past the cap can only grow —
+          // never generate pairs from them again
+          val small = union.groupBy(col("band"), col("bucket"))
+            .agg(count(lit(1)).as("bsz")).filter(col("bsz") <= 100)
+            .select(col("band"), col("bucket"))
+          val pairs = newB.as("a")
+            .join(union.join(small, Seq("band", "bucket")).as("b"),
+              col("a.band") === col("b.band") &&
+                col("a.bucket") === col("b.bucket") &&
+                col("a.doc_id") =!= col("b.doc_id"))
+            .select(
+              least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
+              greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
+              col("a.band").as("band"), col("a.bucket").as("bucket"))
+            .distinct()
+          // append order matters: pairs (derived from the band state
+          // just read) land first; only then do the new bands/sigs
+          // extend the state dirs (the st09 no-self-overwrite rule)
+          StateFold.append(pairs, pairDir)
+          StateFold.append(newB, bandDir)
+          StateFold.append(sigs, sigDir)
+        }
         val keep = ss.read.parquet(bandDir)
           .groupBy(col("band"), col("bucket"))
           .agg(count(lit(1)).as("bsz"))
@@ -948,35 +856,28 @@ object Streams {
     QueryDef("st11_stream_heavyhitter",
       graft.operators.Corpus.x42OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val mgDir = graft.Scratch.path(
           s"graft_stheavy_v1_${graft.ContentKey.key(
             java.nio.file.Paths.get(d, "documents.parquet"))}")
-        resetDir(mgDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): the batch's exact counts (a lossless MG
-            // summary) APPEND to the log; the MG reduction runs at read
-            // time / compaction over the summed log — mergeability per
-            // Agarwal et al. survives either order, and a single
-            // reduction over exact totals under-estimates LESS than the
-            // per-batch cascade, so the superset guarantee the verified
-            // recount needs still holds.
-            val counts = batch
-              .select(explode(graft.functions.Text.tokens(col("text")))
-                .as("word"))
-              .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-            StateFold.append(counts, mgDir)
-            StateFold.maybeCompact(spark, mgDir)(df => mgReduce(
-              df.groupBy(col("word")).agg(sum(col("cnt")).as("cnt")), 256))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(mgDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): the batch's exact counts (a lossless MG
+          // summary) APPEND to the log; the MG reduction runs at read
+          // time / compaction over the summed log — mergeability per
+          // Agarwal et al. survives either order, and a single
+          // reduction over exact totals under-estimates LESS than the
+          // per-batch cascade, so the superset guarantee the verified
+          // recount needs still holds.
+          val counts = batch
+            .select(explode(graft.functions.Text.tokens(col("text")))
+              .as("word"))
+            .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+          StateFold.append(counts, mgDir)
+          StateFold.maybeCompact(spark, mgDir)(df => mgReduce(
+            df.groupBy(col("word")).agg(sum(col("cnt")).as("cnt")), 256))
+        }
         // x42's verification pass: exact recount of the state's candidate
         // words over the full corpus (the staged dirs hold exactly the
         // corpus), then the 1/40 threshold — identical final answer
@@ -1014,30 +915,23 @@ object Streams {
     QueryDef("st12_stream_hll",
       graft.operators.TextAnalysis.x62OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageEventsSplit(ss, d)
+        val stage = stageSplit(ss, d, "events", "event_id", "split")
         val regDir = graft.Scratch.path(
           s"graft_sthll_v1_${graft.ContentKey.key(
             java.nio.file.Paths.get(d, "events.parquet"))}")
-        resetDir(regDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): per-batch register maxima APPEND; the
-            // max-merge (idempotent + commutative + associative — the
-            // easiest merge class of all) runs at read time / compaction
-            val part = graft.operators.TextAnalysis
-              .hllRegRho(batch.select(col("user_id")))
-              .groupBy(col("reg")).agg(max(col("rho")).as("rho"))
-            StateFold.append(part, regDir)
-            StateFold.maybeCompact(spark, regDir)(
-              _.groupBy(col("reg")).agg(max(col("rho")).as("rho")))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(regDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): per-batch register maxima APPEND; the
+          // max-merge (idempotent + commutative + associative — the
+          // easiest merge class of all) runs at read time / compaction
+          val part = graft.operators.TextAnalysis
+            .hllRegRho(batch.select(col("user_id")))
+            .groupBy(col("reg")).agg(max(col("rho")).as("rho"))
+          StateFold.append(part, regDir)
+          StateFold.maybeCompact(spark, regDir)(
+            _.groupBy(col("reg")).agg(max(col("rho")).as("rho")))
+        }
         val ev = ss.read.parquet(stage).select(col("user_id"))
         graft.operators.TextAnalysis.hllEstimate(ss,
           ss.read.parquet(regDir)
@@ -1066,37 +960,31 @@ object Streams {
     QueryDef("st13_stream_retention",
       graft.operators.Analytics.q78OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageEventsSplit(ss, d)
+        val stage = stageSplit(ss, d, "events", "event_id", "split")
         val key = graft.ContentKey.key(
           java.nio.file.Paths.get(d, "events.parquet"))
         val firstDir = graft.Scratch.path(s"graft_stret_first_v1_$key")
         val actDir = graft.Scratch.path(s"graft_stret_act_v1_$key")
-        resetDir(firstDir); resetDir(actDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) folds (r13): per-batch first-ts minima and distinct
-            // (user, week) pairs APPEND; min-merge and set-union move to
-            // read time / compaction (both idempotent + mergeable)
-            val purch = Tables.normalizeTs(batch)
-              .filter(col("event_type") === "purchase")
-              .select(col("user_id"), col("ts"))
-              .localCheckpoint() // both folds share one evaluation
-            StateFold.append(purch.groupBy(col("user_id"))
-              .agg(min(col("ts")).as("first_ts")), firstDir)
-            StateFold.maybeCompact(spark, firstDir)(_.groupBy(col("user_id"))
-              .agg(min(col("first_ts")).as("first_ts")))
-            StateFold.append(purch
-              .select(col("user_id"), date_trunc("week", col("ts")).as("w"))
-              .distinct(), actDir)
-            StateFold.maybeCompact(spark, actDir)(_.distinct())
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        Seq(firstDir, actDir).map(java.nio.file.Paths.get(_))
+          .foreach(graft.Publish.deleteTree)
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) folds (r13): per-batch first-ts minima and distinct
+          // (user, week) pairs APPEND; min-merge and set-union move to
+          // read time / compaction (both idempotent + mergeable)
+          val purch = Tables.normalizeTs(batch)
+            .filter(col("event_type") === "purchase")
+            .select(col("user_id"), col("ts"))
+            .localCheckpoint() // both folds share one evaluation
+          StateFold.append(purch.groupBy(col("user_id"))
+            .agg(min(col("ts")).as("first_ts")), firstDir)
+          StateFold.maybeCompact(spark, firstDir)(_.groupBy(col("user_id"))
+            .agg(min(col("first_ts")).as("first_ts")))
+          StateFold.append(purch
+            .select(col("user_id"), date_trunc("week", col("ts")).as("w"))
+            .distinct(), actDir)
+          StateFold.maybeCompact(spark, actDir)(_.distinct())
+        }
         // q78's finish, read from the converged streaming state.
         val f = ss.read.parquet(firstDir)
           .groupBy(col("user_id")).agg(min(col("first_ts")).as("first_ts"))
@@ -1136,33 +1024,26 @@ object Streams {
     QueryDef("st14_stream_sample",
       graft.operators.TextAnalysis.x97OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val sampleDir = graft.Scratch.path(
           s"graft_stsample_v1_${graft.ContentKey.key(
             java.nio.file.Paths.get(d, "documents.parquet"))}")
-        resetDir(sampleDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): the batch's own top-20 APPENDS; the k-vs-k
-            // merge (top-k under a total priority order is mergeable)
-            // runs at read time / compaction
-            val part = batch
-              .select(col("doc_id"), col("source"), col("n_chars"),
-                Num.roundOut(col("n_chars") * 1000000008.0
-                  / (graft.functions.Text.fingerprint(col("text")) + 1), 4)
-                  .as("pri"))
-              .orderBy(col("pri").desc, col("doc_id")).limit(20)
-            StateFold.append(part, sampleDir)
-            StateFold.maybeCompact(spark, sampleDir)(
-              _.orderBy(col("pri").desc, col("doc_id")).limit(20))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(sampleDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): the batch's own top-20 APPENDS; the k-vs-k
+          // merge (top-k under a total priority order is mergeable)
+          // runs at read time / compaction
+          val part = batch
+            .select(col("doc_id"), col("source"), col("n_chars"),
+              Num.roundOut(col("n_chars") * 1000000008.0
+                / (graft.functions.Text.fingerprint(col("text")) + 1), 4)
+                .as("pri"))
+            .orderBy(col("pri").desc, col("doc_id")).limit(20)
+          StateFold.append(part, sampleDir)
+          StateFold.maybeCompact(spark, sampleDir)(
+            _.orderBy(col("pri").desc, col("doc_id")).limit(20))
+        }
         ss.read.parquet(sampleDir)
           .orderBy(col("pri").desc, col("doc_id")).limit(20)
       }
@@ -1186,30 +1067,23 @@ object Streams {
     QueryDef("st15_stream_dup_stats",
       graft.operators.Dedup.x96OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val stateDir = graft.Scratch.path(
           s"graft_stdup_v1_${graft.ContentKey.key(
             java.nio.file.Paths.get(d, "documents.parquet"))}")
-        resetDir(stateDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): per-batch digest partials APPEND; the
-            // sum-merge runs at read time / compaction
-            StateFold.append(batch
-              .select(md5(col("text")).as("th"), col("n_chars"))
-              .groupBy(col("th"))
-              .agg(count(lit(1)).as("csize"), sum(col("n_chars")).as("mass")),
-              stateDir)
-            StateFold.maybeCompact(spark, stateDir)(_.groupBy(col("th"))
-              .agg(sum(col("csize")).as("csize"), sum(col("mass")).as("mass")))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(stateDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): per-batch digest partials APPEND; the
+          // sum-merge runs at read time / compaction
+          StateFold.append(batch
+            .select(md5(col("text")).as("th"), col("n_chars"))
+            .groupBy(col("th"))
+            .agg(count(lit(1)).as("csize"), sum(col("n_chars")).as("mass")),
+            stateDir)
+          StateFold.maybeCompact(spark, stateDir)(_.groupBy(col("th"))
+            .agg(sum(col("csize")).as("csize"), sum(col("mass")).as("mass")))
+        }
         // x96's finish, read from the converged cluster state.
         val g = ss.read.parquet(stateDir).groupBy(col("th"))
           .agg(sum(col("csize")).as("csize"), sum(col("mass")).as("mass"))
@@ -1247,27 +1121,20 @@ object Streams {
     QueryDef("st16_stream_growth",
       graft.operators.Analytics.x109OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageEventsSplit(ss, d)
+        val stage = stageSplit(ss, d, "events", "event_id", "split")
         val actDir = graft.Scratch.path(s"graft_stgrow_act_v1_${
           graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}")
-        resetDir(actDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): the batch's distinct pairs APPEND; the
-            // set-union (idempotent) runs at read time / compaction
-            StateFold.append(Tables.normalizeTs(batch)
-              .select(col("user_id"),
-                to_date(date_trunc("week", col("ts"))).as("w"))
-              .distinct(), actDir)
-            StateFold.maybeCompact(spark, actDir)(_.distinct())
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(actDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): the batch's distinct pairs APPEND; the
+          // set-union (idempotent) runs at read time / compaction
+          StateFold.append(Tables.normalizeTs(batch)
+            .select(col("user_id"),
+              to_date(date_trunc("week", col("ts"))).as("w"))
+            .distinct(), actDir)
+          StateFold.maybeCompact(spark, actDir)(_.distinct())
+        }
         graft.operators.Analytics.growthLedger(
           ss.read.parquet(actDir).distinct())
       }
@@ -1289,29 +1156,22 @@ object Streams {
     QueryDef("st17_stream_ab",
       graft.operators.Analytics.x111OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageEventsSplit(ss, d)
+        val stage = stageSplit(ss, d, "events", "event_id", "split")
         val momDir = graft.Scratch.path(s"graft_stab_mom_v1_${
           graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}")
-        resetDir(momDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): per-batch moment partials APPEND; the
-            // sum-merge runs at read time / compaction
-            StateFold.append(graft.operators.Analytics.abMoments(
-              Tables.normalizeTs(batch)), momDir)
-            StateFold.maybeCompact(spark, momDir)(
-              _.groupBy(col("event_type")).agg(
-                sum(col("na")).as("na"), sum(col("nb")).as("nb"),
-                sum(col("sa")).as("sa"), sum(col("sb")).as("sb"),
-                sum(col("qa")).as("qa"), sum(col("qb")).as("qb")))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(momDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): per-batch moment partials APPEND; the
+          // sum-merge runs at read time / compaction
+          StateFold.append(graft.operators.Analytics.abMoments(
+            Tables.normalizeTs(batch)), momDir)
+          StateFold.maybeCompact(spark, momDir)(
+            _.groupBy(col("event_type")).agg(
+              sum(col("na")).as("na"), sum(col("nb")).as("nb"),
+              sum(col("sa")).as("sa"), sum(col("sb")).as("sb"),
+              sum(col("qa")).as("qa"), sum(col("qb")).as("qb")))
+        }
         graft.operators.Analytics.abReadout(ss.read.parquet(momDir)
           .groupBy(col("event_type")).agg(
             sum(col("na")).as("na"), sum(col("nb")).as("nb"),
@@ -1340,28 +1200,21 @@ object Streams {
     QueryDef("st18_stream_topk",
       graft.operators.Analytics.x125OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageEventsSplit(ss, d)
+        val stage = stageSplit(ss, d, "events", "event_id", "split")
         val ledDir = graft.Scratch.path(s"graft_sttopk_led_v1_${
           graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}")
-        resetDir(ledDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): per-batch ledger partials APPEND; the
-            // integer sum-merge runs at read time / compaction
-            StateFold.append(graft.operators.Analytics.userValueState(
-              Tables.normalizeTs(batch)), ledDir)
-            StateFold.maybeCompact(spark, ledDir)(
-              _.groupBy(col("event_type"), col("user_id")).agg(
-                sum(col("n_events")).as("n_events"),
-                sum(col("sv_milli")).as("sv_milli")))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(ledDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): per-batch ledger partials APPEND; the
+          // integer sum-merge runs at read time / compaction
+          StateFold.append(graft.operators.Analytics.userValueState(
+            Tables.normalizeTs(batch)), ledDir)
+          StateFold.maybeCompact(spark, ledDir)(
+            _.groupBy(col("event_type"), col("user_id")).agg(
+              sum(col("n_events")).as("n_events"),
+              sum(col("sv_milli")).as("sv_milli")))
+        }
         graft.operators.Analytics.valueTopK(ss.read.parquet(ledDir)
           .groupBy(col("event_type"), col("user_id")).agg(
             sum(col("n_events")).as("n_events"),
@@ -1387,27 +1240,20 @@ object Streams {
     QueryDef("st19_stream_changepoint",
       graft.operators.Analytics.x119OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageEventsSplit(ss, d)
+        val stage = stageSplit(ss, d, "events", "event_id", "split")
         val dayDir = graft.Scratch.path(s"graft_stchg_day_v1_${
           graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}")
-        resetDir(dayDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): per-batch daily counts APPEND; the
-            // sum-merge runs at read time / compaction
-            StateFold.append(Tables.normalizeTs(batch)
-              .groupBy(to_date(col("ts")).as("day"))
-              .agg(count(lit(1)).as("cnt")), dayDir)
-            StateFold.maybeCompact(spark, dayDir)(
-              _.groupBy(col("day")).agg(sum(col("cnt")).as("cnt")))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(dayDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): per-batch daily counts APPEND; the
+          // sum-merge runs at read time / compaction
+          StateFold.append(Tables.normalizeTs(batch)
+            .groupBy(to_date(col("ts")).as("day"))
+            .agg(count(lit(1)).as("cnt")), dayDir)
+          StateFold.maybeCompact(spark, dayDir)(
+            _.groupBy(col("day")).agg(sum(col("cnt")).as("cnt")))
+        }
         graft.operators.Analytics.changepointReport(ss.read.parquet(dayDir)
           .groupBy(col("day")).agg(sum(col("cnt")).as("cnt")))
       }
@@ -1430,26 +1276,19 @@ object Streams {
     QueryDef("st20_stream_srm",
       graft.operators.Analytics.x127OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageEventsSplit(ss, d)
+        val stage = stageSplit(ss, d, "events", "event_id", "split")
         val actDir = graft.Scratch.path(s"graft_stsrm_act_v1_${
           graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}")
-        resetDir(actDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): the batch's distinct pairs APPEND; the
-            // set-union (idempotent) runs at read time / compaction
-            StateFold.append(
-              batch.select(col("event_type"), col("user_id")).distinct(),
-              actDir)
-            StateFold.maybeCompact(spark, actDir)(_.distinct())
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(actDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): the batch's distinct pairs APPEND; the
+          // set-union (idempotent) runs at read time / compaction
+          StateFold.append(
+            batch.select(col("event_type"), col("user_id")).distinct(),
+            actDir)
+          StateFold.maybeCompact(spark, actDir)(_.distinct())
+        }
         graft.operators.Analytics.srmReadout(
           ss.read.parquet(actDir).distinct())
       }
@@ -1477,34 +1316,27 @@ object Streams {
     QueryDef("st21_stream_ivf",
       graft.operators.Similarity.x101OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageEmbeddingsSplit(ss, d)
+        val stage = stageSplit(ss, d, "embeddings", "vec_id", "vecsplit")
         val ivfDir = graft.Scratch.path(s"graft_stivf_v1_${
           graft.ContentKey.key(java.nio.file.Paths.get(d, "embeddings.parquet"))}")
-        resetDir(ivfDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): the batch's assignment rows APPEND — this
-            // IS the "append of partitioned files" the r12 header only
-            // promised; assignment is per-vector deterministic, so the
-            // distinct (replay armor) runs at read time / compaction
-            val cents = graft.operators.Similarity.frozenCents(spark, d)
-            val normed = batch
-              .select(col("vec_id"),
-                transform(col("embedding"), _.cast("double")).as("v"))
-              .withColumn("nrm",
-                sqrt(graft.operators.Similarity.dot(col("v"), col("v"))))
-              .select(col("vec_id"), col("v"), col("nrm"))
-            StateFold.append(
-              graft.operators.Similarity.assignFrozen(normed, cents), ivfDir)
-            StateFold.maybeCompact(spark, ivfDir)(_.distinct())
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(ivfDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): the batch's assignment rows APPEND — this
+          // IS the "append of partitioned files" the r12 header only
+          // promised; assignment is per-vector deterministic, so the
+          // distinct (replay armor) runs at read time / compaction
+          val cents = graft.operators.Similarity.frozenCents(spark, d)
+          val normed = batch
+            .select(col("vec_id"),
+              transform(col("embedding"), _.cast("double")).as("v"))
+            .withColumn("nrm",
+              sqrt(graft.operators.Similarity.dot(col("v"), col("v"))))
+            .select(col("vec_id"), col("v"), col("nrm"))
+          StateFold.append(
+            graft.operators.Similarity.assignFrozen(normed, cents), ivfDir)
+          StateFold.maybeCompact(spark, ivfDir)(_.distinct())
+        }
         graft.operators.Similarity.ivfProbeReport(
           ss.read.parquet(ivfDir).distinct())
       }
@@ -1555,17 +1387,8 @@ object Streams {
         val ccDir = graft.Scratch.path(s"graft_stcc_v2_${
           graft.ContentKey.key(
             java.nio.file.Paths.get(d, "documents.parquet"))}")
-        resetDir(ccDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            singleStoreCcBatch(batch, ccDir)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(ccDir))
+        drain(replay(ss, stage))(singleStoreCcBatch(_, ccDir))
         // no-state fallback carries the real (node, comp) schema off the
         // stage (a 0-column emptyDataFrame would fail ccReport's column
         // resolution on an empty staged split — r14 review)
@@ -1595,62 +1418,55 @@ object Streams {
         val stDir = graft.Scratch.path(s"graft_sttrans_v1_${
           graft.ContentKey.key(
             java.nio.file.Paths.get(d, "events.parquet"))}")
-        resetDir(stDir)
+        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
         val cntDir = s"$stDir/counts"
         val lastDir = s"$stDir/last"
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) folds (r13): the batch's transition counts and its
-            // per-user last event APPEND to the two logs; the sum-merge
-            // and the per-user max-merge (the frontier = the max
-            // (ts, event_id) event per user — mergeable, no carry-forward
-            // anti-join needed) run at read time / compaction
-            val b = batch.select(col("user_id"), col("ts"),
-              col("event_id"), col("event_type")).localCheckpoint()
-            val mergeLast = (df: DataFrame) => df
-              .groupBy(col("user_id"))
-              .agg(max(struct(col("ts"), col("event_id"),
-                col("event_type"))).as("f"))
-              .select(col("user_id"), col("f.ts").as("ts"),
-                col("f.event_id").as("event_id"),
-                col("f.event_type").as("event_type"))
-            val priorLast = mergeLast(StateFold.readOr(spark, lastDir, b))
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-            val inPairs = b
-              .withColumn("to_type", lead(col("event_type"), 1).over(w))
-              .filter(col("to_type").isNotNull)
-              .select(col("event_type").as("from_type"), col("to_type"))
-            val firsts = b.withColumn("rn", row_number().over(w))
-              .filter(col("rn") === 1)
-              .select(col("user_id"), col("event_type").as("to_type"))
-            val boundary = priorLast
-              .select(col("user_id"), col("event_type").as("from_type"))
-              .join(firsts, "user_id")
-              .select(col("from_type"), col("to_type"))
-            // counts delta first (it reads the pre-batch frontier), then
-            // the frontier delta extends the log
-            StateFold.append(inPairs.unionByName(boundary)
-              .groupBy(col("from_type"), col("to_type"))
-              .agg(count(lit(1)).as("n")), cntDir)
-            StateFold.maybeCompact(spark, cntDir)(
-              _.groupBy(col("from_type"), col("to_type"))
-                .agg(sum(col("n")).as("n")))
-            val lasts = b.withColumn("rn", row_number().over(
-                org.apache.spark.sql.expressions.Window
-                  .partitionBy(col("user_id"))
-                  .orderBy(col("ts").desc, col("event_id").desc)))
-              .filter(col("rn") === 1).drop("rn")
-            StateFold.append(lasts, lastDir)
-            StateFold.maybeCompact(spark, lastDir)(mergeLast)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) folds (r13): the batch's transition counts and its
+          // per-user last event APPEND to the two logs; the sum-merge
+          // and the per-user max-merge (the frontier = the max
+          // (ts, event_id) event per user — mergeable, no carry-forward
+          // anti-join needed) run at read time / compaction
+          val b = batch.select(col("user_id"), col("ts"),
+            col("event_id"), col("event_type")).localCheckpoint()
+          val mergeLast = (df: DataFrame) => df
+            .groupBy(col("user_id"))
+            .agg(max(struct(col("ts"), col("event_id"),
+              col("event_type"))).as("f"))
+            .select(col("user_id"), col("f.ts").as("ts"),
+              col("f.event_id").as("event_id"),
+              col("f.event_type").as("event_type"))
+          val priorLast = mergeLast(StateFold.readOr(spark, lastDir, b))
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+          val inPairs = b
+            .withColumn("to_type", lead(col("event_type"), 1).over(w))
+            .filter(col("to_type").isNotNull)
+            .select(col("event_type").as("from_type"), col("to_type"))
+          val firsts = b.withColumn("rn", row_number().over(w))
+            .filter(col("rn") === 1)
+            .select(col("user_id"), col("event_type").as("to_type"))
+          val boundary = priorLast
+            .select(col("user_id"), col("event_type").as("from_type"))
+            .join(firsts, "user_id")
+            .select(col("from_type"), col("to_type"))
+          // counts delta first (it reads the pre-batch frontier), then
+          // the frontier delta extends the log
+          StateFold.append(inPairs.unionByName(boundary)
+            .groupBy(col("from_type"), col("to_type"))
+            .agg(count(lit(1)).as("n")), cntDir)
+          StateFold.maybeCompact(spark, cntDir)(
+            _.groupBy(col("from_type"), col("to_type"))
+              .agg(sum(col("n")).as("n")))
+          val lasts = b.withColumn("rn", row_number().over(
+              org.apache.spark.sql.expressions.Window
+                .partitionBy(col("user_id"))
+                .orderBy(col("ts").desc, col("event_id").desc)))
+            .filter(col("rn") === 1).drop("rn")
+          StateFold.append(lasts, lastDir)
+          StateFold.maybeCompact(spark, lastDir)(mergeLast)
+        }
         graft.operators.Analytics.transReport(ss.read.parquet(cntDir)
           .groupBy(col("from_type"), col("to_type"))
           .agg(sum(col("n")).as("n")))
@@ -1671,28 +1487,21 @@ object Streams {
     QueryDef("st24_stream_drift",
       graft.operators.Analytics.x156OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val stDir = graft.Scratch.path(s"graft_stdrift_v1_${
           graft.ContentKey.key(
             java.nio.file.Paths.get(d, "documents.parquet"))}")
-        resetDir(stDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): per-batch counts APPEND; the sum-merge
-            // runs at read time / compaction
-            StateFold.append(batch
-              .groupBy(col("source"), col("n_chars").as("v"))
-              .agg(count(lit(1)).as("c")), stDir)
-            StateFold.maybeCompact(spark, stDir)(
-              _.groupBy(col("source"), col("v")).agg(sum(col("c")).as("c")))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): per-batch counts APPEND; the sum-merge
+          // runs at read time / compaction
+          StateFold.append(batch
+            .groupBy(col("source"), col("n_chars").as("v"))
+            .agg(count(lit(1)).as("c")), stDir)
+          StateFold.maybeCompact(spark, stDir)(
+            _.groupBy(col("source"), col("v")).agg(sum(col("c")).as("c")))
+        }
         graft.operators.Analytics.ksReport(
           graft.operators.Analytics.lengthEcdfGridFrom(
             ss.read.parquet(stDir)
@@ -1715,27 +1524,20 @@ object Streams {
     QueryDef("st25_stream_calibration",
       graft.operators.TextAnalysis.x174OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val stDir = graft.Scratch.path(s"graft_stcalib_v1_${
           graft.ContentKey.key(
             java.nio.file.Paths.get(d, "documents.parquet"))}")
-        resetDir(stDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): per-batch bin partials APPEND; the
-            // sum-merge runs at read time / compaction
-            StateFold.append(
-              graft.operators.TextAnalysis.calibrationBinDelta(batch), stDir)
-            StateFold.maybeCompact(spark, stDir)(_.groupBy(col("bin"))
-              .agg(sum(col("n")).as("n"), sum(col("p")).as("p")))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): per-batch bin partials APPEND; the
+          // sum-merge runs at read time / compaction
+          StateFold.append(
+            graft.operators.TextAnalysis.calibrationBinDelta(batch), stDir)
+          StateFold.maybeCompact(spark, stDir)(_.groupBy(col("bin"))
+            .agg(sum(col("n")).as("n"), sum(col("p")).as("p")))
+        }
         graft.operators.TextAnalysis.pavReport(ss.read.parquet(stDir)
           .groupBy(col("bin"))
           .agg(sum(col("n")).as("n"), sum(col("p")).as("p")))
@@ -1756,26 +1558,19 @@ object Streams {
     QueryDef("st26_stream_trend",
       graft.operators.Classic.x175OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageOrdersSplit(ss, d)
+        val stage = stageSplit(ss, d, "orders", "o_orderkey", "ordsplit")
         val stDir = graft.Scratch.path(s"graft_sttrend_v1_${
           graft.ContentKey.key(
             java.nio.file.Paths.get(d, "orders.parquet"))}")
-        resetDir(stDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): per-batch weekly cents APPEND; the integer
-            // sum-merge runs at read time / compaction
-            StateFold.append(graft.operators.Classic.weeklyCents(batch), stDir)
-            StateFold.maybeCompact(spark, stDir)(
-              _.groupBy(col("w")).agg(sum(col("cents")).as("cents")))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): per-batch weekly cents APPEND; the integer
+          // sum-merge runs at read time / compaction
+          StateFold.append(graft.operators.Classic.weeklyCents(batch), stDir)
+          StateFold.maybeCompact(spark, stDir)(
+            _.groupBy(col("w")).agg(sum(col("cents")).as("cents")))
+        }
         graft.operators.Classic.theilSenReport(ss.read.parquet(stDir)
           .groupBy(col("w")).agg(sum(col("cents")).as("cents")))
       }
@@ -1795,27 +1590,20 @@ object Streams {
     QueryDef("st27_stream_packing",
       graft.operators.Mining.x183OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val stDir = graft.Scratch.path(s"graft_stpack_v1_${
           graft.ContentKey.key(
             java.nio.file.Paths.get(d, "documents.parquet"))}")
-        resetDir(stDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): per-batch bucket partials APPEND; the
-            // sum-merge runs at read time / compaction
-            StateFold.append(
-              graft.operators.Mining.packingBucketDelta(batch), stDir)
-            StateFold.maybeCompact(spark, stDir)(
-              _.groupBy(col("l")).agg(sum(col("n_docs")).as("n_docs")))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): per-batch bucket partials APPEND; the
+          // sum-merge runs at read time / compaction
+          StateFold.append(
+            graft.operators.Mining.packingBucketDelta(batch), stDir)
+          StateFold.maybeCompact(spark, stDir)(
+            _.groupBy(col("l")).agg(sum(col("n_docs")).as("n_docs")))
+        }
         graft.operators.Mining.packingPlan(ss.read.parquet(stDir)
           .groupBy(col("l")).agg(sum(col("n_docs")).as("n_docs")))
       }
@@ -1836,65 +1624,59 @@ object Streams {
     QueryDef("st28_stream_golden_record",
       graft.operators.Dedup.x184OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stagePartSplit(ss, d)
+        val stage = stageSplit(ss, d, "part", "p_partkey", "partsplit")
         val stDir = graft.Scratch.path(s"graft_stgolden_v1_${
           graft.ContentKey.key(
             java.nio.file.Paths.get(d, "part.parquet"))}")
-        resetDir(stDir)
+        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
         val namesDir = s"$stDir/names"; val edgesDir = s"$stDir/edges"
         val mergeNames = (df: DataFrame) => df.groupBy(col("name"))
           .agg(sum(col("n_parts")).as("n_parts"),
             min(col("min_cents")).as("min_cents"),
             max(col("max_cents")).as("max_cents"))
-        val q = ss.readStream.schema(ss.read.parquet(stage).schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) folds (r13): survivorship partials and new edges
-            // APPEND (a pair lands exactly once, in the batch where its
-            // later endpoint first appears — so the edge log is already
-            // duplicate-free across batches); the sum/min/max merge runs
-            // at read time / compaction
-            // checkpoint under AQE (StateFold.withWriteAqe): the frozen
-            // layout feeds the names APPEND below, and without AQE the
-            // agg's 8 pinned shuffle partitions land 8 near-empty state
-            // files per batch (measured 16 vs 2 per stream)
-            val delta = StateFold.withWriteAqe(spark) {
-              graft.operators.Dedup.nameStatsDelta(batch)
-                .localCheckpoint() // read twice (new-name probe + append)
-            }
-            val prior = StateFold.readOr(spark, namesDir, delta)
-            // (b) first: new names = in delta, absent from prior state
-            val newNames = delta.select(col("name"))
-              .join(prior.select(col("name")), Seq("name"), "left_anti")
-            def tk(df: DataFrame) = df.select(col("name"),
-              element_at(split(col("name"), " "), 1).as("adj"),
-              element_at(split(col("name"), " "), -1).as("noun"))
-            val allNames = prior.select(col("name"))
-              .union(delta.select(col("name"))).distinct()
-            val newTk = tk(newNames).localCheckpoint()
-            val allTk = tk(allNames).localCheckpoint()
-            def block(key: String) = newTk
-              .select(col("name").as("na"), col(key).as("k"))
-              .join(allTk.select(col("name").as("nb"), col(key).as("k")),
-                "k")
-              .filter(col("na") =!= col("nb"))
-              .select(least(col("na"), col("nb")).as("src"),
-                greatest(col("na"), col("nb")).as("dst"))
-            val newEdges = block("noun").union(block("adj")).distinct()
-              .filter(graft.functions.Num.roundOut(
-                graft.plans.JaroWinkler(col("src"), col("dst")), 6)
-                >= 0.85)
-            StateFold.append(newEdges, edgesDir)
-            StateFold.maybeCompact(spark, edgesDir)(_.distinct())
-            // (a) then: the survivorship partials extend the names log
-            StateFold.append(delta, namesDir)
-            StateFold.maybeCompact(spark, namesDir)(mergeNames)
-            ()
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) folds (r13): survivorship partials and new edges
+          // APPEND (a pair lands exactly once, in the batch where its
+          // later endpoint first appears — so the edge log is already
+          // duplicate-free across batches); the sum/min/max merge runs
+          // at read time / compaction
+          // checkpoint under AQE (StateFold.withWriteAqe): the frozen
+          // layout feeds the names APPEND below, and without AQE the
+          // agg's 8 pinned shuffle partitions land 8 near-empty state
+          // files per batch (measured 16 vs 2 per stream)
+          val delta = StateFold.withWriteAqe(spark) {
+            graft.operators.Dedup.nameStatsDelta(batch)
+              .localCheckpoint() // read twice (new-name probe + append)
           }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+          val prior = StateFold.readOr(spark, namesDir, delta)
+          // (b) first: new names = in delta, absent from prior state
+          val newNames = delta.select(col("name"))
+            .join(prior.select(col("name")), Seq("name"), "left_anti")
+          def tk(df: DataFrame) = df.select(col("name"),
+            element_at(split(col("name"), " "), 1).as("adj"),
+            element_at(split(col("name"), " "), -1).as("noun"))
+          val allNames = prior.select(col("name"))
+            .union(delta.select(col("name"))).distinct()
+          val newTk = tk(newNames).localCheckpoint()
+          val allTk = tk(allNames).localCheckpoint()
+          def block(key: String) = newTk
+            .select(col("name").as("na"), col(key).as("k"))
+            .join(allTk.select(col("name").as("nb"), col(key).as("k")),
+              "k")
+            .filter(col("na") =!= col("nb"))
+            .select(least(col("na"), col("nb")).as("src"),
+              greatest(col("na"), col("nb")).as("dst"))
+          val newEdges = block("noun").union(block("adj")).distinct()
+            .filter(graft.functions.Num.roundOut(
+              graft.plans.JaroWinkler(col("src"), col("dst")), 6)
+              >= 0.85)
+          StateFold.append(newEdges, edgesDir)
+          StateFold.maybeCompact(spark, edgesDir)(_.distinct())
+          // (a) then: the survivorship partials extend the names log
+          StateFold.append(delta, namesDir)
+          StateFold.maybeCompact(spark, namesDir)(mergeNames)
+        }
         val half = ss.read.parquet(edgesDir).distinct()
         val sym = half
           .union(half.select(col("dst").as("src"), col("src").as("dst")))
@@ -1936,60 +1718,53 @@ object Streams {
         val stDir = graft.Scratch.path(s"graft_stscd2_v2_${
           graft.ContentKey.key(
             java.nio.file.Paths.get(d, "events.parquet"))}")
-        resetDir(stDir)
+        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
         val runsDir = s"$stDir/runs"
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            val local = graft.operators.Merge.scd2RawRuns(batch)
-              .localCheckpoint()
-            val parts = KeyedFold.touched(local, Seq("user_id"))
-            val prior = KeyedFold
-              .readParts(spark, runsDir, parts, local)
-              .localCheckpoint() // frontier + merge both read the slice
-            // frontier: each user's open run (max run_id) and its status
-            val frontier = prior
-              .groupBy(col("user_id"))
-              .agg(max(struct(col("run_id"), col("status"))).as("f"))
-              .select(col("user_id"), col("f.run_id").as("p_runs"),
-                col("f.status").as("p_status"))
-            // does the batch's FIRST local run extend the open run?
-            val flags = local.filter(col("run_id") === 1)
-              .join(frontier, Seq("user_id"), "left")
-              .select(col("user_id"),
-                coalesce(col("p_runs"), lit(0L)).as("p_runs"),
-                (col("p_runs").isNotNull &&
-                  col("p_status") <=> col("status")).as("mrg"))
-            val loc2 = local.join(flags, Seq("user_id"))
-            val mergedDelta = loc2
-              .filter(col("run_id") === 1 && col("mrg"))
-              .select(col("user_id"), col("p_runs").as("run_id"),
-                col("n_events").as("delta"))
-            val freshRuns = loc2
-              .filter(!(col("run_id") === 1 && col("mrg")))
-              .select(col("user_id"),
-                (col("p_runs") + col("run_id")
-                  - when(col("mrg"), 1L).otherwise(0L)).as("run_id"),
-                col("status"), col("valid_from"), col("n_events"))
-            val updated = prior
-              .join(mergedDelta, Seq("user_id", "run_id"), "left")
-              .withColumn("n_events",
-                col("n_events") + coalesce(col("delta"), lit(0L)))
-              .drop("delta")
-              .unionByName(freshRuns)
-              .localCheckpoint() // sever from the files being replaced
-            // `updated` = every surviving run of the touched partitions
-            // (prior slice rows pass through with a null delta), so the
-            // dynamic overwrite replaces exactly those kh dirs
-            KeyedFold.overwriteTouched(updated, Seq("user_id"), runsDir,
-              parts)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          val local = graft.operators.Merge.scd2RawRuns(batch)
+            .localCheckpoint()
+          val parts = KeyedFold.touched(local, Seq("user_id"))
+          val prior = KeyedFold
+            .readParts(spark, runsDir, parts, local)
+            .localCheckpoint() // frontier + merge both read the slice
+          // frontier: each user's open run (max run_id) and its status
+          val frontier = prior
+            .groupBy(col("user_id"))
+            .agg(max(struct(col("run_id"), col("status"))).as("f"))
+            .select(col("user_id"), col("f.run_id").as("p_runs"),
+              col("f.status").as("p_status"))
+          // does the batch's FIRST local run extend the open run?
+          val flags = local.filter(col("run_id") === 1)
+            .join(frontier, Seq("user_id"), "left")
+            .select(col("user_id"),
+              coalesce(col("p_runs"), lit(0L)).as("p_runs"),
+              (col("p_runs").isNotNull &&
+                col("p_status") <=> col("status")).as("mrg"))
+          val loc2 = local.join(flags, Seq("user_id"))
+          val mergedDelta = loc2
+            .filter(col("run_id") === 1 && col("mrg"))
+            .select(col("user_id"), col("p_runs").as("run_id"),
+              col("n_events").as("delta"))
+          val freshRuns = loc2
+            .filter(!(col("run_id") === 1 && col("mrg")))
+            .select(col("user_id"),
+              (col("p_runs") + col("run_id")
+                - when(col("mrg"), 1L).otherwise(0L)).as("run_id"),
+              col("status"), col("valid_from"), col("n_events"))
+          val updated = prior
+            .join(mergedDelta, Seq("user_id", "run_id"), "left")
+            .withColumn("n_events",
+              col("n_events") + coalesce(col("delta"), lit(0L)))
+            .drop("delta")
+            .unionByName(freshRuns)
+            .localCheckpoint() // sever from the files being replaced
+          // `updated` = every surviving run of the touched partitions
+          // (prior slice rows pass through with a null delta), so the
+          // dynamic overwrite replaces exactly those kh dirs
+          KeyedFold.overwriteTouched(updated, Seq("user_id"), runsDir,
+            parts)
+        }
         // no-state fallback carries the real raw-runs schema (derived
         // through scd2RawRuns on a 0-row stage slice — r14 review: a
         // 0-column emptyDataFrame breaks scd2Finish's resolution)
@@ -2014,27 +1789,20 @@ object Streams {
     QueryDef("st30_stream_bpe",
       graft.operators.Mining.x196OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val stDir = graft.Scratch.path(s"graft_stbpe_v1_${
           graft.ContentKey.key(
             java.nio.file.Paths.get(d, "documents.parquet"))}")
-        resetDir(stDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) fold (r13): per-batch word counts APPEND; the
-            // sum-merge runs at read time / compaction
-            StateFold.append(
-              graft.operators.Mining.bpeWordCounts(batch), stDir)
-            StateFold.maybeCompact(spark, stDir)(
-              _.groupBy(col("word")).agg(sum(col("wc")).as("wc")))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) fold (r13): per-batch word counts APPEND; the
+          // sum-merge runs at read time / compaction
+          StateFold.append(
+            graft.operators.Mining.bpeWordCounts(batch), stDir)
+          StateFold.maybeCompact(spark, stDir)(
+            _.groupBy(col("word")).agg(sum(col("wc")).as("wc")))
+        }
         val (_, reports) = graft.operators.Mining.bpeTrain(
           graft.operators.Mining.bpeSym0FromCounts(
             ss.read.parquet(stDir)
@@ -2065,27 +1833,20 @@ object Streams {
     QueryDef("st31_stream_curation",
       graft.operators.Mining.x199OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val stDir = graft.Scratch.path(s"graft_stcur_v1_${
           graft.ContentKey.key(
             java.nio.file.Paths.get(d, "documents.parquet"))}")
-        resetDir(stDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            // O(Δ) fold (r13): the metadata frame is PURELY additive —
-            // each doc contributes exactly one row, so the log IS the
-            // state (identity merge, no compaction read-amplification
-            // concern beyond file count; the batch never reads the dir)
-            StateFold.append(
-              graft.operators.Mining.curationFrame(batch), stDir)
-            StateFold.maybeCompact(batch.sparkSession, stDir)(identity)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
+        drain(replay(ss, stage)) { batch =>
+          // O(Δ) fold (r13): the metadata frame is PURELY additive —
+          // each doc contributes exactly one row, so the log IS the
+          // state (identity merge, no compaction read-amplification
+          // concern beyond file count; the batch never reads the dir)
+          StateFold.append(
+            graft.operators.Mining.curationFrame(batch), stDir)
+          StateFold.maybeCompact(batch.sparkSession, stDir)(identity)
+        }
         graft.operators.Mining.curationReport(ss.read.parquet(stDir))
       }
     },
@@ -2111,34 +1872,28 @@ object Streams {
     QueryDef("st32_stream_contamination",
       graft.operators.Mining.x200OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val key = graft.ContentKey.key(
           java.nio.file.Paths.get(d, "documents.parquet"))
         val trDir = graft.Scratch.path(s"graft_stcontam_tr_v1_$key")
         val evDir = graft.Scratch.path(s"graft_stcontam_ev_v1_$key")
-        resetDir(trDir); resetDir(evDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) folds (r13): the TRAIN side appends the batch's OWN
-            // distinct grams (the set-union dedup across batches moves to
-            // read time / compaction); the EVAL side is purely additive —
-            // positioned rows, identity merge
-            val cg = graft.operators.Mining.contamGrams(batch)
-              .localCheckpoint() // both folds share one gram pass
-            StateFold.append(
-              cg.filter(col("is_train")).select(col("g")).distinct(), trDir)
-            StateFold.maybeCompact(spark, trDir)(_.distinct())
-            StateFold.append(cg.filter(!col("is_train"))
-              .select(col("doc_id"), col("pos"), col("g")), evDir)
-            StateFold.maybeCompact(spark, evDir)(identity)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        Seq(trDir, evDir).map(java.nio.file.Paths.get(_))
+          .foreach(graft.Publish.deleteTree)
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) folds (r13): the TRAIN side appends the batch's OWN
+          // distinct grams (the set-union dedup across batches moves to
+          // read time / compaction); the EVAL side is purely additive —
+          // positioned rows, identity merge
+          val cg = graft.operators.Mining.contamGrams(batch)
+            .localCheckpoint() // both folds share one gram pass
+          StateFold.append(
+            cg.filter(col("is_train")).select(col("g")).distinct(), trDir)
+          StateFold.maybeCompact(spark, trDir)(_.distinct())
+          StateFold.append(cg.filter(!col("is_train"))
+            .select(col("doc_id"), col("pos"), col("g")), evDir)
+          StateFold.maybeCompact(spark, evDir)(identity)
+        }
         graft.operators.Mining.contamReport(
           ss.read.parquet(trDir).distinct(), ss.read.parquet(evDir))
       }
@@ -2166,47 +1921,41 @@ object Streams {
     QueryDef("st33_stream_classifier",
       graft.operators.Quality.x204OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val key = graft.ContentKey.key(
           java.nio.file.Paths.get(d, "documents.parquet"))
         val ceDir = graft.Scratch.path(s"graft_stqcls_ce_v1_$key")
         val lbDir = graft.Scratch.path(s"graft_stqcls_lb_v1_$key")
         val bsDir = graft.Scratch.path(s"graft_stqcls_bs_v1_$key")
-        resetDir(ceDir); resetDir(lbDir); resetDir(bsDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // O(Δ) folds (r13): feature cells and labels are purely
-            // additive (each doc lands in exactly one batch — identity
-            // merge); bin occupancy partials sum-merge at read time /
-            // compaction. No batch ever reads the state dirs.
-            // One tokenize pass per batch (r16): the cell fold and the
-            // bin-stat fold both derive from the same checkpointed
-            // counts instead of re-tokenizing the text. Since r17 the
-            // checkpoint is the BINNED (doc, b, c) frame, so the
-            // vocab-sized distinct-words hash join also runs once per
-            // batch (each builder re-ran it) and the checkpoint carries
-            // bins, never word strings.
-            val tokb = graft.operators.Quality.binnedCounts(
-              graft.operators.Quality.tokenCounts(batch))
-              .localCheckpoint()
-            StateFold.append(
-              graft.operators.Quality.featureCellsFromBinned(tokb), ceDir)
-            StateFold.maybeCompact(spark, ceDir)(identity)
-            StateFold.append(graft.operators.Quality.labelTable(batch), lbDir)
-            StateFold.maybeCompact(spark, lbDir)(identity)
-            StateFold.append(
-              graft.operators.Quality.binStatsFromBinned(tokb), bsDir)
-            StateFold.maybeCompact(spark, bsDir)(_.groupBy(col("b"))
-              .agg(sum(col("bin_tokens")).as("bin_tokens"),
-                sum(col("bin_docs")).as("bin_docs")))
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        Seq(ceDir, lbDir, bsDir).map(java.nio.file.Paths.get(_))
+          .foreach(graft.Publish.deleteTree)
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // O(Δ) folds (r13): feature cells and labels are purely
+          // additive (each doc lands in exactly one batch — identity
+          // merge); bin occupancy partials sum-merge at read time /
+          // compaction. No batch ever reads the state dirs.
+          // One tokenize pass per batch (r16): the cell fold and the
+          // bin-stat fold both derive from the same checkpointed
+          // counts instead of re-tokenizing the text. Since r17 the
+          // checkpoint is the BINNED (doc, b, c) frame, so the
+          // vocab-sized distinct-words hash join also runs once per
+          // batch (each builder re-ran it) and the checkpoint carries
+          // bins, never word strings.
+          val tokb = graft.operators.Quality.binnedCounts(
+            graft.operators.Quality.tokenCounts(batch))
+            .localCheckpoint()
+          StateFold.append(
+            graft.operators.Quality.featureCellsFromBinned(tokb), ceDir)
+          StateFold.maybeCompact(spark, ceDir)(identity)
+          StateFold.append(graft.operators.Quality.labelTable(batch), lbDir)
+          StateFold.maybeCompact(spark, lbDir)(identity)
+          StateFold.append(
+            graft.operators.Quality.binStatsFromBinned(tokb), bsDir)
+          StateFold.maybeCompact(spark, bsDir)(_.groupBy(col("b"))
+            .agg(sum(col("bin_tokens")).as("bin_tokens"),
+              sum(col("bin_docs")).as("bin_docs")))
+        }
         // retrain to the VALIDATED stopping round (r14): the chosen
         // round is a once-per-content hyperparameter off the persisted
         // qvalcurve artifact — a <=24-row read, not a corpus pass — and
@@ -2250,32 +1999,26 @@ object Streams {
     QueryDef("st34_stream_hardness_mix",
       graft.operators.Quality.x208OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val key = graft.ContentKey.key(
           java.nio.file.Paths.get(d, "documents.parquet"))
         val ceDir = graft.Scratch.path(s"graft_sthm_ce_v1_$key")
         val lbDir = graft.Scratch.path(s"graft_sthm_lb_v1_$key")
         val mmDir = graft.Scratch.path(s"graft_sthm_mm_v1_$key")
-        resetDir(ceDir); resetDir(lbDir); resetDir(mmDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // all three folds purely additive (each doc in exactly one
-            // batch) — identity merges, O(Δ) appends
-            StateFold.append(
-              graft.operators.Quality.featureCells(batch), ceDir)
-            StateFold.maybeCompact(spark, ceDir)(identity)
-            StateFold.append(graft.operators.Quality.labelTable(batch), lbDir)
-            StateFold.maybeCompact(spark, lbDir)(identity)
-            StateFold.append(graft.operators.Quality.mixMeta(batch), mmDir)
-            StateFold.maybeCompact(spark, mmDir)(identity)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        Seq(ceDir, lbDir, mmDir).map(java.nio.file.Paths.get(_))
+          .foreach(graft.Publish.deleteTree)
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // all three folds purely additive (each doc in exactly one
+          // batch) — identity merges, O(Δ) appends
+          StateFold.append(
+            graft.operators.Quality.featureCells(batch), ceDir)
+          StateFold.maybeCompact(spark, ceDir)(identity)
+          StateFold.append(graft.operators.Quality.labelTable(batch), lbDir)
+          StateFold.maybeCompact(spark, lbDir)(identity)
+          StateFold.append(graft.operators.Quality.mixMeta(batch), mmDir)
+          StateFold.maybeCompact(spark, mmDir)(identity)
+        }
         val cells = ss.read.parquet(ceDir)
         val labels = ss.read.parquet(lbDir)
         // st33's r14 rule: the retrain-at-serve stops at the validated
@@ -2309,30 +2052,24 @@ object Streams {
     QueryDef("st35_stream_tagging",
       graft.operators.Tokens.x216OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val key = graft.ContentKey.key(
           java.nio.file.Paths.get(d, "documents.parquet"))
         val ixDir = graft.Scratch.path(s"graft_sttag_ix_v1_$key")
         val mdDir = graft.Scratch.path(s"graft_sttag_md_v1_$key")
-        resetDir(ixDir); resetDir(mdDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // both folds purely additive — identity merges, O(Δ) appends
-            StateFold.append(batch.select(col("doc_id"),
-              posexplode(graft.functions.Text.tokens(col("text")))
-                .as(Seq("i", "word"))), ixDir)
-            StateFold.maybeCompact(spark, ixDir)(identity)
-            StateFold.append(
-              batch.select(col("doc_id"), col("source")), mdDir)
-            StateFold.maybeCompact(spark, mdDir)(identity)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        Seq(ixDir, mdDir).map(java.nio.file.Paths.get(_))
+          .foreach(graft.Publish.deleteTree)
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // both folds purely additive — identity merges, O(Δ) appends
+          StateFold.append(batch.select(col("doc_id"),
+            posexplode(graft.functions.Text.tokens(col("text")))
+              .as(Seq("i", "word"))), ixDir)
+          StateFold.maybeCompact(spark, ixDir)(identity)
+          StateFold.append(
+            batch.select(col("doc_id"), col("source")), mdDir)
+          StateFold.maybeCompact(spark, mdDir)(identity)
+        }
         graft.operators.Tokens.taggingReport(
           graft.operators.Tokens.taggedSpansFrom(ss.read.parquet(ixDir)),
           ss.read.parquet(mdDir))
@@ -2363,26 +2100,19 @@ object Streams {
     QueryDef("st36_stream_span_dedup",
       graft.operators.Corpus.x41OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val key = graft.ContentKey.key(
           java.nio.file.Paths.get(d, "documents.parquet"))
         val ixDir = graft.Scratch.path(s"graft_stspan_ix_v1_$key")
-        resetDir(ixDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            // purely additive positional index — identity merge, O(Δ)
-            StateFold.append(batch.select(col("doc_id"),
-              posexplode(graft.functions.Text.tokens(col("text")))
-                .as(Seq("i", "word"))), ixDir)
-            StateFold.maybeCompact(spark, ixDir)(identity)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        graft.Publish.deleteTree(java.nio.file.Paths.get(ixDir))
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          // purely additive positional index — identity merge, O(Δ)
+          StateFold.append(batch.select(col("doc_id"),
+            posexplode(graft.functions.Text.tokens(col("text")))
+              .as(Seq("i", "word"))), ixDir)
+          StateFold.maybeCompact(spark, ixDir)(identity)
+        }
         val base = ss.read.parquet(ixDir)
           .groupBy(col("doc_id"))
           .agg(transform(
@@ -2429,17 +2159,9 @@ object Streams {
           java.nio.file.Paths.get(d, "documents.parquet"))
         val labDir = graft.Scratch.path(s"graft_stccf_lab_v1_$key")
         val memDir = graft.Scratch.path(s"graft_stccf_mem_v1_$key")
-        resetDir(labDir); resetDir(memDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            frontierCcBatch(batch, labDir, memDir)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        Seq(labDir, memDir).map(java.nio.file.Paths.get(_))
+          .foreach(graft.Publish.deleteTree)
+        drain(replay(ss, stage))(frontierCcBatch(_, labDir, memDir))
         graft.operators.Corpus.ccReport(
           KeyedFold.readAll(ss, labDir,
             ss.read.parquet(stage).select(col("src").as("node"),
@@ -2480,37 +2202,31 @@ object Streams {
     QueryDef("st38_stream_contam_dual",
       graft.operators.Tokens.x225OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val key = graft.ContentKey.key(
           java.nio.file.Paths.get(d, "documents.parquet"))
         val tgDir = graft.Scratch.path(s"graft_stdual_tg_v1_$key")
         val egDir = graft.Scratch.path(s"graft_stdual_eg_v1_$key")
         val mdDir = graft.Scratch.path(s"graft_stdual_md_v1_$key")
-        resetDir(tgDir); resetDir(egDir); resetDir(mdDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            val cg = graft.operators.Mining.contamGrams(batch)
-              .localCheckpoint() // both gram folds share one text pass
-            StateFold.append(cg.filter(col("is_train"))
-              .select(col("doc_id"), col("g")).distinct(), tgDir)
-            StateFold.maybeCompact(spark, tgDir)(_.distinct())
-            StateFold.append(cg.filter(!col("is_train"))
-              .select(col("doc_id"), col("pos"), col("g")), egDir)
-            StateFold.maybeCompact(spark, egDir)(identity)
-            StateFold.append(batch.select(col("doc_id"),
-              (graft.functions.Text.fingerprint(col("text")) % 100 < 90)
-                .as("is_train"),
-              size(graft.functions.Text.tokens(col("text"))).cast("long")
-                .as("n_tokens")), mdDir)
-            StateFold.maybeCompact(spark, mdDir)(identity)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        Seq(tgDir, egDir, mdDir).map(java.nio.file.Paths.get(_))
+          .foreach(graft.Publish.deleteTree)
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          val cg = graft.operators.Mining.contamGrams(batch)
+            .localCheckpoint() // both gram folds share one text pass
+          StateFold.append(cg.filter(col("is_train"))
+            .select(col("doc_id"), col("g")).distinct(), tgDir)
+          StateFold.maybeCompact(spark, tgDir)(_.distinct())
+          StateFold.append(cg.filter(!col("is_train"))
+            .select(col("doc_id"), col("pos"), col("g")), egDir)
+          StateFold.maybeCompact(spark, egDir)(identity)
+          StateFold.append(batch.select(col("doc_id"),
+            (graft.functions.Text.fingerprint(col("text")) % 100 < 90)
+              .as("is_train"),
+            size(graft.functions.Text.tokens(col("text"))).cast("long")
+              .as("n_tokens")), mdDir)
+          StateFold.maybeCompact(spark, mdDir)(identity)
+        }
         // no checkpoint: the artifact is already a stable parquet scan,
         // read once by the frontier and once by the as-of projection
         val lcp = graft.operators.Tokens.suffixLcpArtifact(ss, d)
@@ -2560,30 +2276,24 @@ object Streams {
     QueryDef("st39_stream_waterfall",
       graft.operators.Tokens.x231OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageDocumentsSplit(ss, d)
+        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
         val key = graft.ContentKey.key(
           java.nio.file.Paths.get(d, "documents.parquet"))
         val mdDir = graft.Scratch.path(s"graft_stwf_md_v1_$key")
         val sgDir = graft.Scratch.path(s"graft_stwf_sg_v1_$key")
-        resetDir(mdDir); resetDir(sgDir)
-        val schema = ss.read.parquet(stage).schema
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val spark = batch.sparkSession
-            StateFold.append(batch.select(col("doc_id"), col("source"),
-              md5(col("text")).as("h"),
-              size(graft.functions.Text.tokens(col("text"))).cast("long")
-                .as("ntok")), mdDir)
-            StateFold.maybeCompact(spark, mdDir)(identity)
-            StateFold.append(
-              graft.operators.Dedup.portableSigs(batch), sgDir)
-            StateFold.maybeCompact(spark, sgDir)(identity)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        Seq(mdDir, sgDir).map(java.nio.file.Paths.get(_))
+          .foreach(graft.Publish.deleteTree)
+        drain(replay(ss, stage)) { batch =>
+          val spark = batch.sparkSession
+          StateFold.append(batch.select(col("doc_id"), col("source"),
+            md5(col("text")).as("h"),
+            size(graft.functions.Text.tokens(col("text"))).cast("long")
+              .as("ntok")), mdDir)
+          StateFold.maybeCompact(spark, mdDir)(identity)
+          StateFold.append(
+            graft.operators.Dedup.portableSigs(batch), sgDir)
+          StateFold.maybeCompact(spark, sgDir)(identity)
+        }
         val md = ss.read.parquet(mdDir).localCheckpoint()
         val surv = md.groupBy(col("h"))
           .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))

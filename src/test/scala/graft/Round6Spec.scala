@@ -105,7 +105,8 @@ class Round6Spec extends AnyFunSuite {
     // the staging helper reads raw events (nanos ts) — same conf its
     // production caller (the streaming conf scope) provides
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stage = graft.streaming.Streams.stageEventsSplit(spark, sf0_001)
+    val stage = graft.streaming.Streams.stageSplit(spark, sf0_001,
+      "events", "event_id", "split")
     val files = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
     val parquets = try files.filter(_.toString.endsWith(".parquet")).count()
       finally files.close()

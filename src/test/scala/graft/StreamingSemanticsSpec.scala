@@ -169,4 +169,123 @@ class StreamingSemanticsSpec extends AnyFunSuite {
     assert(on.sparkSession.conf.get(aqe) == "true")
     assert(adaptive(on))
   }
+
+  /** A stage of `slices.size` parquet files, file i holding `slices(i)` as
+    * column `id`, with strictly increasing mtimes (the file source's
+    * arrival order). */
+  private def stageOf(slices: Seq[Seq[Long]]): String = {
+    import spark.implicits._
+    val stage = java.nio.file.Files.createTempDirectory("drv_stage")
+    slices.zipWithIndex.foreach { case (ids, i) =>
+      val tmp = java.nio.file.Files.createTempDirectory("drv_slice")
+      ids.toDF("id").coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val l = java.nio.file.Files.list(tmp)
+      val part = try l.filter(_.toString.endsWith(".parquet")).findFirst().get()
+        finally l.close()
+      val dst = stage.resolve(s"batch_$i.parquet")
+      java.nio.file.Files.move(part, dst)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1600000000000L + i * 60000L))
+    }
+    stage.toString
+  }
+
+  test("stream driver: replay + drain runs one micro-batch per staged file, in file order") {
+    val stage = stageOf(Seq(Seq(3L, 1L, 2L), Seq(20L, 10L)))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    Streams.drain(Streams.replay(spark, stage)) { batch =>
+      seen.add(batch.collect().map(_.getLong(0)).toSeq.sorted); ()
+    }
+    assert(seen.toArray.toSeq == Seq(Seq(1L, 2L, 3L), Seq(10L, 20L)))
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("stream driver: an exception in the fold reaches the caller and no query stays active") {
+    val stage = stageOf(Seq(Seq(1L), Seq(2L)))
+    val e = intercept[Exception] {
+      Streams.drain(Streams.replay(spark, stage)) { _ =>
+        throw new IllegalStateException("fold failed")
+      }
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage == "fold failed"), s"fold exception lost: $chain")
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("stream driver: collect returns every row of a Complete-mode aggregate") {
+    val stage = stageOf(Seq(Seq(1L, 2L, 3L, 4L), Seq(3L, 4L, 5L)))
+    val agg = Streams.replay(spark, stage)
+      .groupBy((col("id") % 2).as("k"))
+      .agg(count(lit(1)).as("n"), sum(col("id")).as("s"))
+    val got = Streams.collect(agg,
+        org.apache.spark.sql.streaming.OutputMode.Complete())
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == Set((0L, 3L, 10L), (1L, 4L, 12L)))
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("stream driver lint: main code starts a stream sink only inside the Streams driver") {
+    // a sink pattern may appear only in these defs of Streams.scala;
+    // windowedAppend returns its running query, which its spec drives
+    // mid-stream
+    val allowed = Set("replay", "drain", "collect", "windowedAppend")
+    val patterns = Seq("processAllAvailable", ".foreachBatch", "format(\"memory\")")
+    val scope = ("""^(\s*)(?:(?:private|protected)(?:\[\w+\])?\s+)?(?:final\s+)?""" +
+      """(?:def|val|lazy val|object|class|trait)\s+(\w+)""").r
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val files = walk(new java.io.File("src/main/scala"))
+    assert(files.exists(_.getName == "Streams.scala"), "lint scanned no source")
+    val hits = files.flatMap { f =>
+      var inDoc = false
+      // code only: scaladoc/block comments and line-comment tails removed
+      val code = scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.map { l =>
+        val t = l.trim
+        if (inDoc) { if (t.contains("*/")) inDoc = false; "" }
+        else if (t.startsWith("/*")) { inDoc = !t.contains("*/"); "" }
+        else l.split("//", 2)(0)
+      }
+      def indent(l: String) = l.takeWhile(_ == ' ').length
+      code.zipWithIndex.collect { case (l, i) if patterns.exists(l.contains) =>
+        // the enclosing scopes, innermost first
+        val owners = (i - 1 to 0 by -1).foldLeft((indent(l), List.empty[String])) {
+          case ((lim, acc), j) => scope.findFirstMatchIn(code(j)) match {
+            case Some(m) if m.group(1).length < lim => (m.group(1).length, m.group(2) :: acc)
+            case _ => (lim, acc)
+          }
+        }._2.reverse
+        (f.getName, i + 1, owners, l.trim)
+      }
+    }
+    val (ok, bad) = hits.partition { case (name, _, owners, _) =>
+      name == "Streams.scala" && owners.exists(allowed)
+    }
+    assert(bad.isEmpty, "a stream sink is started outside the Streams driver " +
+      s"(use replay/drain/collect): ${bad.mkString("; ")}")
+    // the scan must see the driver's own sinks, or it proves nothing
+    patterns.foreach(p => assert(ok.exists(_._4.contains(p)), s"no $p found in the driver"))
+    assert(ok.map(_._3.find(allowed)).distinct.flatten.toSet ==
+      Set("drain", "collect", "windowedAppend"))
+  }
+
+  test("stageSplit call sites publish under registered staging directory names") {
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/streaming/Streams.scala")), "UTF-8")
+    val sites = """stageSplit\(ss, d, "(\w+)", "(\w+)", "(\w+)"\)""".r
+      .findAllMatchIn(src).map(m => (m.group(1), m.group(2), m.group(3))).toSet
+    assert(sites == Set(("events", "event_id", "split"),
+      ("documents", "doc_id", "docsplit"), ("orders", "o_orderkey", "ordsplit"),
+      ("part", "p_partkey", "partsplit"), ("embeddings", "vec_id", "vecsplit")))
+    val families = operators.ArtifactVacuum.families.map(f => (f.srcTable, f.prefix)).toSet
+    sites.foreach { case (table, _, prefix) =>
+      assert(families.contains((table, s"graft_stream_${prefix}_v1_")),
+        s"$table split stage is not a registered vacuum family")
+    }
+    val stage = Streams.stageSplit(spark, sf0_001, "documents", "doc_id", "docsplit")
+    assert(java.nio.file.Paths.get(stage).getFileName.toString ==
+      "graft_stream_docsplit_v1_" +
+        ContentKey.key(java.nio.file.Paths.get(sf0_001, "documents.parquet")))
+  }
 }
