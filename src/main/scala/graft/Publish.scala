@@ -33,14 +33,6 @@ object Publish {
   def isPublished(out: String, marker: String = "_SUCCESS"): Boolean =
     Files.exists(Paths.get(out, marker))
 
-  /** Build-once: if `out` is already published, no-op; otherwise run
-    * `build` against a process-unique temp path and atomically rename it
-    * to `out`. `build` must leave `marker` in the temp dir (Spark's
-    * parquet writer emits `_SUCCESS` itself; non-Spark builders can ask
-    * [[once]] to stamp it via `stampMarker = true`). Safe under any number
-    * of concurrent builders in any number of JVMs: exactly one rename
-    * wins, every loser deletes its temp and the subsequent read serves
-    * the winner. */
   /** Wall-seconds spent ACTUALLY BUILDING artifacts through [[once]] in
     * this JVM (already-published no-ops cost nothing and add nothing).
     * Bench snapshots this around its warmup and around each timed query
@@ -51,6 +43,14 @@ object Publish {
   private val buildNanos = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] def buildSeconds: Double = buildNanos.get / 1e9
 
+  /** Build-once: if `out` is already published, no-op; otherwise run
+    * `build` against a process-unique temp path and atomically rename it
+    * to `out`. `build` must leave `marker` in the temp dir (Spark's
+    * parquet writer emits `_SUCCESS` itself; non-Spark builders can ask
+    * [[once]] to stamp it via `stampMarker = true`). Safe under any number
+    * of concurrent builders in any number of JVMs: exactly one rename
+    * wins, every loser deletes its temp and the subsequent read serves
+    * the winner. */
   def once(out: String, marker: String = "_SUCCESS",
       stampMarker: Boolean = false)(build: String => Unit): Unit = {
     if (isPublished(out, marker)) return
@@ -134,8 +134,8 @@ object Publish {
     * [[Scratch]] root suffixed with this, so two JVMs replaying the same
     * streaming query at the same content key never share mutable state —
     * the other half of the st14 race. Within one JVM the token is stable,
-    * so a query's own `resetDir` + per-batch overwrite cycle behaves
-    * exactly as before. Stale scratch from dead JVMs is swept by
+    * so a query's own reset-then-fold cycle over its state directories
+    * is unaffected. Stale scratch from dead JVMs is swept by
     * [[operators.ArtifactVacuum]]. */
   lazy val runToken: String =
     java.util.UUID.randomUUID().toString.take(8)

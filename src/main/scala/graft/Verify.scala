@@ -1,8 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
 /** Audit-trail counts, regenerated from code rather than maintained by hand
   * (VERDICT r7 item 6). Run: `sbt "runMain graft.Counts"`. */
 object Counts {
@@ -13,6 +11,8 @@ object Counts {
   }
 }
 
+/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)

@@ -247,7 +247,7 @@ object Breadth {
 
     // Batch sessionization via gaps-and-islands (lag + cumulative sum) —
     // the declarative twin of streaming/Streams.sessionize (cross-checked
-    // in StreamingSpec). One shuffle by user; windows pipeline after it.
+    // in ExtensionSpec). One shuffle by user; windows pipeline after it.
     QueryDef("q34_sessions_batch",
       """WITH marked AS (
         |  SELECT user_id, ts, event_id,

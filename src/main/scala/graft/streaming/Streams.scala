@@ -14,7 +14,7 @@ import graft.{QueryDef, Tables}
   * capability extension: the same daily aggregation the batch engine runs,
   * executed as a real `readStream → agg → memory sink` query, plus a
   * stateful sessionization operator (`mapGroupsWithState`) exercised by
-  * StreamingSpec.
+  * ExtensionSpec.
   *
   * Scale: file-source streaming partitions work by file; the windowed
   * aggregate is the same partial+final hash aggregate as batch. In
@@ -97,6 +97,19 @@ object Streams {
       .format("memory").queryName(name).start()
     try q.processAllAvailable() finally q.stop()
     stream.sparkSession.table(name)
+  }
+
+  /** A query's per-run state directories, one per stem: each is the
+    * scratch path `graft_<stem>_<content key of table.parquet>`, emptied,
+    * so every state log and keyed store starts its run empty. The
+    * content key is computed once per call. */
+  private def fresh(d: String, table: String, stems: String*): Seq[String] = {
+    val key = graft.ContentKey.key(java.nio.file.Paths.get(d, s"$table.parquet"))
+    stems.map { stem =>
+      val dir = graft.Scratch.path(s"graft_${stem}_$key")
+      graft.Publish.deleteTree(java.nio.file.Paths.get(dir))
+      dir
+    }
   }
 
   /** Atomically publish a staged micro-batch directory: each slice is
@@ -328,7 +341,8 @@ object Streams {
   /** Watermarked append-mode windowed aggregation over a file-source
     * stream: only windows the 10-minute watermark has closed are emitted,
     * and rows arriving later than the watermark are dropped — the
-    * late-data contract StreamingSpec pins with a crafted two-batch feed. */
+    * late-data contract StreamingSemanticsSpec pins with a crafted
+    * two-batch feed. */
   def windowedAppend(s: SparkSession, srcDir: String,
       sinkName: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val schema = new org.apache.spark.sql.types.StructType()
@@ -415,10 +429,9 @@ object Streams {
 
     // Oracle-checked: the foreachBatch incremental merge (the reference's
     // freshness model, M1) must CONVERGE to the batch keep-latest answer —
-    // same oracle shape as q13, reached through the streaming path. The
-    // upsert is idempotent, so a pre-existing fact dir from an earlier run
-    // of the same content re-merges to the identical result. ts stays raw
-    // long nanos here: the merge ordering only compares it, never emits it.
+    // same oracle shape as q13, reached through the streaming path. ts
+    // stays raw long nanos here: the merge ordering only compares it,
+    // never emits it.
     QueryDef("st02_stream_upsert",
       """SELECT user_id, event_type, event_id, round(1e-9 + value, 4) AS value
         |FROM (SELECT *, row_number() OVER (
@@ -427,9 +440,8 @@ object Streams {
         |      FROM events)
         |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin) { (s, d) =>
       val stage = stageEvents(d)
-      val factDir = java.nio.file.Paths.get(graft.Scratch.path(
-        s"graft_stfact_v3_${graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}"),
-        "fact").toString
+      val Seq(root) = fresh(d, "events", "stfact_v3")
+      val factDir = s"$root/fact"
       withStreamingConfs(s) { ss =>
         incrementalUpsert(ss, stage, factDir, Seq("user_id", "event_type"),
           Seq(col("ts").desc, col("event_id").desc))
@@ -497,41 +509,31 @@ object Streams {
     // combines partials across batches; the converged matview must equal
     // the one-shot batch aggregate (st01's oracle). Merge state is
     // O(groups), never O(events) — counts and sums are associative, the
-    // only aggregate class this pattern is legal for. Since r13 the fold
-    // is O(Δ): each batch APPENDS its partials to the state log
-    // ([[StateFold]]) and the sum-merge runs at read time (and in the
-    // file-count-triggered compaction) — batch k never rewrites batch
-    // k−1's files. The matview dir is reset per run: a sum-merge is NOT
-    // idempotent under replay (the production form tracks batch ids
-    // through the sink's checkpoint).
+    // only aggregate class this pattern is legal for. The matview is an
+    // O(Δ) [[StateFold.Log]]: each batch appends its partials, and batch
+    // k never rewrites batch k−1's files.
     QueryDef("st06_stream_aggmv",
       """SELECT CAST(ts AS DATE) AS day, event_type,
         |       count(*) AS n, round(1e-9 + sum(value), 4) AS sum_value
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "events", "event_id", "split")
-        val mvDir = java.nio.file.Paths.get(graft.Scratch.path(
-          s"graft_staggmv_v1_${graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}"),
-          "mv").toString
-        graft.Publish.deleteTree(java.nio.file.Paths.get(mvDir))
-        val merge = (df: DataFrame) => df
+        val Seq(root) = fresh(d, "events", "staggmv_v1")
+        // deliberately LOW threshold (1 — AQE coalesces the tiny
+        // fixture deltas to one file per append): this family
+        // exercises the in-stream compaction path, so the
+        // answer-preservation contract is oracle-covered, not just
+        // unit-tested — Round13Spec pins that a compact event
+        // actually fired here
+        val mv = new StateFold.Log(s"$root/mv", df => df
           .groupBy(col("day"), col("event_type"))
-          .agg(sum(col("n")).as("n"), sum(col("sv")).as("sv"))
+          .agg(sum(col("n")).as("n"), sum(col("sv")).as("sv")), maxFiles = 1)
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          val part = Tables.normalizeTs(batch)
+          mv.add(Tables.normalizeTs(batch)
             .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-            .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
-          StateFold.append(part, mvDir)
-          // deliberately LOW threshold (1 — AQE coalesces the tiny
-          // fixture deltas to one file per append): this family
-          // exercises the in-stream compaction path, so the
-          // answer-preservation contract is oracle-covered, not just
-          // unit-tested — Round13Spec pins that a compact event
-          // actually fired here
-          StateFold.maybeCompact(spark, mvDir, maxFiles = 1)(merge)
+            .agg(count(lit(1)).as("n"), sum(col("value")).as("sv")))
         }
-        merge(ss.read.parquet(mvDir))
+        mv.state(ss)
           .select(col("day"), col("event_type"), col("n"),
             Num.roundOut(col("sv"), 4).as("sum_value"))
           .orderBy(col("day"), col("event_type"))
@@ -695,23 +697,19 @@ object Streams {
         |FROM sq GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "events", "event_id", "split")
-        val smpDir = java.nio.file.Paths.get(graft.Scratch.path(
-          s"graft_stquant_v1_${graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}"),
-          "sample").toString
-        graft.Publish.deleteTree(java.nio.file.Paths.get(smpDir))
+        val Seq(root) = fresh(d, "events", "stquant_v1")
         def bottomK(df: DataFrame): DataFrame = df
           .withColumn("rn", row_number().over(
             org.apache.spark.sql.expressions.Window
               .partitionBy(col("event_type"))
               .orderBy(col("pri"), col("event_id"))))
           .filter(col("rn") <= 64).drop("rn")
+        // each batch appends its own bottom-k; the log's k-vs-k merge is
+        // bottomK again — legal because bottom-k under a total order is
+        // a mergeable fold (top-k(A∪B) = top-k(top-k(A) ∪ top-k(B)))
+        val sample = new StateFold.Log(s"$root/sample", bottomK)
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): the batch's own bottom-k APPENDS to the
-          // log; the k-vs-k merge is the read-time/compaction bottomK —
-          // legal because bottom-k under a total order is a mergeable
-          // fold (top-k(A∪B) = top-k(top-k(A) ∪ top-k(B)))
-          val local = bottomK(batch
+          sample.add(bottomK(batch
             .select(col("event_type"), col("event_id"), col("value"))
             .filter(col("value").isNotNull)
             .withColumn("a", expr("event_id & 4294967295"))
@@ -720,13 +718,11 @@ object Streams {
             .withColumn("a",
               expr("(shiftright(a, 16) ^ a) * 73244475 & 4294967295"))
             .withColumn("pri", expr("shiftright(a, 16) ^ a"))
-            .drop("a"))
-          StateFold.append(local, smpDir)
-          StateFold.maybeCompact(spark, smpDir)(bottomK)
+            .drop("a")))
         }
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("event_type"))
-        bottomK(ss.read.parquet(smpDir))
+        sample.state(ss)
           .withColumn("vr", row_number().over(
             w.orderBy(col("value"), col("event_id"))))
           .withColumn("ns", count(lit(1)).over(w))
@@ -768,14 +764,10 @@ object Streams {
       graft.operators.Dedup.x39OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val root = graft.Scratch.path(
-          s"graft_stneardup_v1_${graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "documents.parquet"))}")
+        val Seq(root) = fresh(d, "documents", "stneardup_v1")
         val sigDir = s"$root/sigs"
         val bandDir = s"$root/bands"
         val pairDir = s"$root/pairs"
-        Seq(sigDir, bandDir, pairDir).map(java.nio.file.Paths.get(_))
-          .foreach(graft.Publish.deleteTree)
         def exists(p: String) =
           java.nio.file.Files.exists(java.nio.file.Paths.get(p, "_SUCCESS"))
         drain(replay(ss, stage)) { batch =>
@@ -857,26 +849,20 @@ object Streams {
       graft.operators.Corpus.x42OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val mgDir = graft.Scratch.path(
-          s"graft_stheavy_v1_${graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "documents.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(mgDir))
+        val Seq(mgDir) = fresh(d, "documents", "stheavy_v1")
+        // each batch's exact counts (a lossless MG summary) append; the
+        // MG reduction runs over the summed log — mergeability per
+        // Agarwal et al. survives either order, and a single reduction
+        // over exact totals under-estimates LESS than the per-batch
+        // cascade, so the superset guarantee the verified recount needs
+        // still holds.
+        val mg = new StateFold.Log(mgDir, df => mgReduce(
+          df.groupBy(col("word")).agg(sum(col("cnt")).as("cnt")), 256))
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): the batch's exact counts (a lossless MG
-          // summary) APPEND to the log; the MG reduction runs at read
-          // time / compaction over the summed log — mergeability per
-          // Agarwal et al. survives either order, and a single
-          // reduction over exact totals under-estimates LESS than the
-          // per-batch cascade, so the superset guarantee the verified
-          // recount needs still holds.
-          val counts = batch
+          mg.add(batch
             .select(explode(graft.functions.Text.tokens(col("text")))
               .as("word"))
-            .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-          StateFold.append(counts, mgDir)
-          StateFold.maybeCompact(spark, mgDir)(df => mgReduce(
-            df.groupBy(col("word")).agg(sum(col("cnt")).as("cnt")), 256))
+            .groupBy(col("word")).agg(count(lit(1)).as("cnt")))
         }
         // x42's verification pass: exact recount of the state's candidate
         // words over the full corpus (the staged dirs hold exactly the
@@ -884,9 +870,7 @@ object Streams {
         val words = ss.read.parquet(stage)
           .select(explode(graft.functions.Text.tokens(col("text")))
             .as("word"))
-        val candidates = mgReduce(ss.read.parquet(mgDir)
-          .groupBy(col("word")).agg(sum(col("cnt")).as("cnt")), 256)
-          .select(col("word"))
+        val candidates = mg.state(ss).select(col("word"))
         words
           .join(broadcast(candidates), Seq("word"), "left_semi")
           .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
@@ -916,26 +900,16 @@ object Streams {
       graft.operators.TextAnalysis.x62OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "events", "event_id", "split")
-        val regDir = graft.Scratch.path(
-          s"graft_sthll_v1_${graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "events.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(regDir))
+        val Seq(regDir) = fresh(d, "events", "sthll_v1")
+        val regs = new StateFold.Log(regDir,
+          _.groupBy(col("reg")).agg(max(col("rho")).as("rho")))
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): per-batch register maxima APPEND; the
-          // max-merge (idempotent + commutative + associative — the
-          // easiest merge class of all) runs at read time / compaction
-          val part = graft.operators.TextAnalysis
+          regs.add(graft.operators.TextAnalysis
             .hllRegRho(batch.select(col("user_id")))
-            .groupBy(col("reg")).agg(max(col("rho")).as("rho"))
-          StateFold.append(part, regDir)
-          StateFold.maybeCompact(spark, regDir)(
-            _.groupBy(col("reg")).agg(max(col("rho")).as("rho")))
+            .groupBy(col("reg")).agg(max(col("rho")).as("rho")))
         }
         val ev = ss.read.parquet(stage).select(col("user_id"))
-        graft.operators.TextAnalysis.hllEstimate(ss,
-          ss.read.parquet(regDir)
-            .groupBy(col("reg")).agg(max(col("rho")).as("rho")),
+        graft.operators.TextAnalysis.hllEstimate(ss, regs.state(ss),
           ev.agg(countDistinct(col("user_id")).as("n_exact")))
       }
     },
@@ -961,36 +935,27 @@ object Streams {
       graft.operators.Analytics.q78OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "events", "event_id", "split")
-        val key = graft.ContentKey.key(
-          java.nio.file.Paths.get(d, "events.parquet"))
-        val firstDir = graft.Scratch.path(s"graft_stret_first_v1_$key")
-        val actDir = graft.Scratch.path(s"graft_stret_act_v1_$key")
-        Seq(firstDir, actDir).map(java.nio.file.Paths.get(_))
-          .foreach(graft.Publish.deleteTree)
+        val Seq(firstDir, actDir) =
+          fresh(d, "events", "stret_first_v1", "stret_act_v1")
+        val first = new StateFold.Log(firstDir, _.groupBy(col("user_id"))
+          .agg(min(col("first_ts")).as("first_ts")))
+        val act = new StateFold.Log(actDir, _.distinct())
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) folds (r13): per-batch first-ts minima and distinct
-          // (user, week) pairs APPEND; min-merge and set-union move to
-          // read time / compaction (both idempotent + mergeable)
           val purch = Tables.normalizeTs(batch)
             .filter(col("event_type") === "purchase")
             .select(col("user_id"), col("ts"))
             .localCheckpoint() // both folds share one evaluation
-          StateFold.append(purch.groupBy(col("user_id"))
-            .agg(min(col("ts")).as("first_ts")), firstDir)
-          StateFold.maybeCompact(spark, firstDir)(_.groupBy(col("user_id"))
-            .agg(min(col("first_ts")).as("first_ts")))
-          StateFold.append(purch
+          first.add(purch.groupBy(col("user_id"))
+            .agg(min(col("ts")).as("first_ts")))
+          act.add(purch
             .select(col("user_id"), date_trunc("week", col("ts")).as("w"))
-            .distinct(), actDir)
-          StateFold.maybeCompact(spark, actDir)(_.distinct())
+            .distinct())
         }
         // q78's finish, read from the converged streaming state.
-        val f = ss.read.parquet(firstDir)
-          .groupBy(col("user_id")).agg(min(col("first_ts")).as("first_ts"))
+        val f = first.state(ss)
           .select(col("user_id"),
             date_trunc("week", col("first_ts")).as("cohort"))
-        val a = ss.read.parquet(actDir).distinct()
+        val a = act.state(ss)
         val sz = f.groupBy(col("cohort")).agg(count(lit(1)).as("n_cohort"))
         f.join(a, Seq("user_id"))
           .groupBy(col("cohort"), col("w"))
@@ -1025,27 +990,18 @@ object Streams {
       graft.operators.TextAnalysis.x97OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val sampleDir = graft.Scratch.path(
-          s"graft_stsample_v1_${graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "documents.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(sampleDir))
+        val Seq(sampleDir) = fresh(d, "documents", "stsample_v1")
+        val sample = new StateFold.Log(sampleDir,
+          _.orderBy(col("pri").desc, col("doc_id")).limit(20))
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): the batch's own top-20 APPENDS; the k-vs-k
-          // merge (top-k under a total priority order is mergeable)
-          // runs at read time / compaction
-          val part = batch
+          sample.add(batch
             .select(col("doc_id"), col("source"), col("n_chars"),
               Num.roundOut(col("n_chars") * 1000000008.0
                 / (graft.functions.Text.fingerprint(col("text")) + 1), 4)
                 .as("pri"))
-            .orderBy(col("pri").desc, col("doc_id")).limit(20)
-          StateFold.append(part, sampleDir)
-          StateFold.maybeCompact(spark, sampleDir)(
-            _.orderBy(col("pri").desc, col("doc_id")).limit(20))
+            .orderBy(col("pri").desc, col("doc_id")).limit(20))
         }
-        ss.read.parquet(sampleDir)
-          .orderBy(col("pri").desc, col("doc_id")).limit(20)
+        sample.state(ss)
       }
     },
 
@@ -1068,25 +1024,17 @@ object Streams {
       graft.operators.Dedup.x96OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val stateDir = graft.Scratch.path(
-          s"graft_stdup_v1_${graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "documents.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(stateDir))
+        val Seq(stateDir) = fresh(d, "documents", "stdup_v1")
+        val clusters = new StateFold.Log(stateDir, _.groupBy(col("th"))
+          .agg(sum(col("csize")).as("csize"), sum(col("mass")).as("mass")))
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): per-batch digest partials APPEND; the
-          // sum-merge runs at read time / compaction
-          StateFold.append(batch
+          clusters.add(batch
             .select(md5(col("text")).as("th"), col("n_chars"))
             .groupBy(col("th"))
-            .agg(count(lit(1)).as("csize"), sum(col("n_chars")).as("mass")),
-            stateDir)
-          StateFold.maybeCompact(spark, stateDir)(_.groupBy(col("th"))
-            .agg(sum(col("csize")).as("csize"), sum(col("mass")).as("mass")))
+            .agg(count(lit(1)).as("csize"), sum(col("n_chars")).as("mass")))
         }
         // x96's finish, read from the converged cluster state.
-        val g = ss.read.parquet(stateDir).groupBy(col("th"))
-          .agg(sum(col("csize")).as("csize"), sum(col("mass")).as("mass"))
+        val g = clusters.state(ss)
         val t = g.agg(sum(col("csize")).as("n_total"))
         g.groupBy(col("csize"))
           .agg(count(lit(1)).as("n_clusters"), sum(col("mass")).as("chars_total"))
@@ -1122,21 +1070,15 @@ object Streams {
       graft.operators.Analytics.x109OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "events", "event_id", "split")
-        val actDir = graft.Scratch.path(s"graft_stgrow_act_v1_${
-          graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(actDir))
+        val Seq(actDir) = fresh(d, "events", "stgrow_act_v1")
+        val act = new StateFold.Log(actDir, _.distinct())
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): the batch's distinct pairs APPEND; the
-          // set-union (idempotent) runs at read time / compaction
-          StateFold.append(Tables.normalizeTs(batch)
+          act.add(Tables.normalizeTs(batch)
             .select(col("user_id"),
               to_date(date_trunc("week", col("ts"))).as("w"))
-            .distinct(), actDir)
-          StateFold.maybeCompact(spark, actDir)(_.distinct())
+            .distinct())
         }
-        graft.operators.Analytics.growthLedger(
-          ss.read.parquet(actDir).distinct())
+        graft.operators.Analytics.growthLedger(act.state(ss))
       }
     },
 
@@ -1157,26 +1099,17 @@ object Streams {
       graft.operators.Analytics.x111OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "events", "event_id", "split")
-        val momDir = graft.Scratch.path(s"graft_stab_mom_v1_${
-          graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(momDir))
-        drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): per-batch moment partials APPEND; the
-          // sum-merge runs at read time / compaction
-          StateFold.append(graft.operators.Analytics.abMoments(
-            Tables.normalizeTs(batch)), momDir)
-          StateFold.maybeCompact(spark, momDir)(
-            _.groupBy(col("event_type")).agg(
-              sum(col("na")).as("na"), sum(col("nb")).as("nb"),
-              sum(col("sa")).as("sa"), sum(col("sb")).as("sb"),
-              sum(col("qa")).as("qa"), sum(col("qb")).as("qb")))
-        }
-        graft.operators.Analytics.abReadout(ss.read.parquet(momDir)
-          .groupBy(col("event_type")).agg(
+        val Seq(momDir) = fresh(d, "events", "stab_mom_v1")
+        val moments = new StateFold.Log(momDir,
+          _.groupBy(col("event_type")).agg(
             sum(col("na")).as("na"), sum(col("nb")).as("nb"),
             sum(col("sa")).as("sa"), sum(col("sb")).as("sb"),
             sum(col("qa")).as("qa"), sum(col("qb")).as("qb")))
+        drain(replay(ss, stage)) { batch =>
+          moments.add(graft.operators.Analytics.abMoments(
+            Tables.normalizeTs(batch)))
+        }
+        graft.operators.Analytics.abReadout(moments.state(ss))
       }
     },
 
@@ -1201,24 +1134,16 @@ object Streams {
       graft.operators.Analytics.x125OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "events", "event_id", "split")
-        val ledDir = graft.Scratch.path(s"graft_sttopk_led_v1_${
-          graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(ledDir))
-        drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): per-batch ledger partials APPEND; the
-          // integer sum-merge runs at read time / compaction
-          StateFold.append(graft.operators.Analytics.userValueState(
-            Tables.normalizeTs(batch)), ledDir)
-          StateFold.maybeCompact(spark, ledDir)(
-            _.groupBy(col("event_type"), col("user_id")).agg(
-              sum(col("n_events")).as("n_events"),
-              sum(col("sv_milli")).as("sv_milli")))
-        }
-        graft.operators.Analytics.valueTopK(ss.read.parquet(ledDir)
-          .groupBy(col("event_type"), col("user_id")).agg(
+        val Seq(ledDir) = fresh(d, "events", "sttopk_led_v1")
+        val ledger = new StateFold.Log(ledDir,
+          _.groupBy(col("event_type"), col("user_id")).agg(
             sum(col("n_events")).as("n_events"),
             sum(col("sv_milli")).as("sv_milli")))
+        drain(replay(ss, stage)) { batch =>
+          ledger.add(graft.operators.Analytics.userValueState(
+            Tables.normalizeTs(batch)))
+        }
+        graft.operators.Analytics.valueTopK(ledger.state(ss))
       }
     },
 
@@ -1241,21 +1166,15 @@ object Streams {
       graft.operators.Analytics.x119OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "events", "event_id", "split")
-        val dayDir = graft.Scratch.path(s"graft_stchg_day_v1_${
-          graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(dayDir))
+        val Seq(dayDir) = fresh(d, "events", "stchg_day_v1")
+        val days = new StateFold.Log(dayDir,
+          _.groupBy(col("day")).agg(sum(col("cnt")).as("cnt")))
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): per-batch daily counts APPEND; the
-          // sum-merge runs at read time / compaction
-          StateFold.append(Tables.normalizeTs(batch)
+          days.add(Tables.normalizeTs(batch)
             .groupBy(to_date(col("ts")).as("day"))
-            .agg(count(lit(1)).as("cnt")), dayDir)
-          StateFold.maybeCompact(spark, dayDir)(
-            _.groupBy(col("day")).agg(sum(col("cnt")).as("cnt")))
+            .agg(count(lit(1)).as("cnt")))
         }
-        graft.operators.Analytics.changepointReport(ss.read.parquet(dayDir)
-          .groupBy(col("day")).agg(sum(col("cnt")).as("cnt")))
+        graft.operators.Analytics.changepointReport(days.state(ss))
       }
     },
 
@@ -1277,20 +1196,12 @@ object Streams {
       graft.operators.Analytics.x127OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "events", "event_id", "split")
-        val actDir = graft.Scratch.path(s"graft_stsrm_act_v1_${
-          graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(actDir))
+        val Seq(actDir) = fresh(d, "events", "stsrm_act_v1")
+        val act = new StateFold.Log(actDir, _.distinct())
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): the batch's distinct pairs APPEND; the
-          // set-union (idempotent) runs at read time / compaction
-          StateFold.append(
-            batch.select(col("event_type"), col("user_id")).distinct(),
-            actDir)
-          StateFold.maybeCompact(spark, actDir)(_.distinct())
+          act.add(batch.select(col("event_type"), col("user_id")).distinct())
         }
-        graft.operators.Analytics.srmReadout(
-          ss.read.parquet(actDir).distinct())
+        graft.operators.Analytics.srmReadout(act.state(ss))
       }
     },
 
@@ -1317,28 +1228,22 @@ object Streams {
       graft.operators.Similarity.x101OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "embeddings", "vec_id", "vecsplit")
-        val ivfDir = graft.Scratch.path(s"graft_stivf_v1_${
-          graft.ContentKey.key(java.nio.file.Paths.get(d, "embeddings.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(ivfDir))
+        val Seq(ivfDir) = fresh(d, "embeddings", "stivf_v1")
+        // assignment is per-vector deterministic, so the log's distinct
+        // is only replay armor
+        val ivf = new StateFold.Log(ivfDir, _.distinct())
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): the batch's assignment rows APPEND — this
-          // IS the "append of partitioned files" the r12 header only
-          // promised; assignment is per-vector deterministic, so the
-          // distinct (replay armor) runs at read time / compaction
-          val cents = graft.operators.Similarity.frozenCents(spark, d)
+          val cents = graft.operators.Similarity
+            .frozenCents(batch.sparkSession, d)
           val normed = batch
             .select(col("vec_id"),
               transform(col("embedding"), _.cast("double")).as("v"))
             .withColumn("nrm",
               sqrt(graft.operators.Similarity.dot(col("v"), col("v"))))
             .select(col("vec_id"), col("v"), col("nrm"))
-          StateFold.append(
-            graft.operators.Similarity.assignFrozen(normed, cents), ivfDir)
-          StateFold.maybeCompact(spark, ivfDir)(_.distinct())
+          ivf.add(graft.operators.Similarity.assignFrozen(normed, cents))
         }
-        graft.operators.Similarity.ivfProbeReport(
-          ss.read.parquet(ivfDir).distinct())
+        graft.operators.Similarity.ivfProbeReport(ivf.state(ss))
       }
     },
 
@@ -1384,10 +1289,7 @@ object Streams {
       graft.operators.Corpus.x146OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageCcEdgesSplit(ss, d)
-        val ccDir = graft.Scratch.path(s"graft_stcc_v2_${
-          graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "documents.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(ccDir))
+        val Seq(ccDir) = fresh(d, "documents", "stcc_v2")
         drain(replay(ss, stage))(singleStoreCcBatch(_, ccDir))
         // no-state fallback carries the real (node, comp) schema off the
         // stage (a 0-column emptyDataFrame would fail ccReport's column
@@ -1415,29 +1317,25 @@ object Streams {
       graft.operators.Analytics.x95OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageEventsTimeSplit(ss, d)
-        val stDir = graft.Scratch.path(s"graft_sttrans_v1_${
-          graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "events.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
-        val cntDir = s"$stDir/counts"
-        val lastDir = s"$stDir/last"
+        val Seq(stDir) = fresh(d, "events", "sttrans_v1")
+        val counts = new StateFold.Log(s"$stDir/counts",
+          _.groupBy(col("from_type"), col("to_type"))
+            .agg(sum(col("n")).as("n")))
+        // the frontier is each user's max (ts, event_id) event — a
+        // mergeable max, so no carry-forward anti-join is needed
+        val mergeLast = (df: DataFrame) => df
+          .groupBy(col("user_id"))
+          .agg(max(struct(col("ts"), col("event_id"),
+            col("event_type"))).as("f"))
+          .select(col("user_id"), col("f.ts").as("ts"),
+            col("f.event_id").as("event_id"),
+            col("f.event_type").as("event_type"))
+        val last = new StateFold.Log(s"$stDir/last", mergeLast)
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) folds (r13): the batch's transition counts and its
-          // per-user last event APPEND to the two logs; the sum-merge
-          // and the per-user max-merge (the frontier = the max
-          // (ts, event_id) event per user — mergeable, no carry-forward
-          // anti-join needed) run at read time / compaction
           val b = batch.select(col("user_id"), col("ts"),
             col("event_id"), col("event_type")).localCheckpoint()
-          val mergeLast = (df: DataFrame) => df
-            .groupBy(col("user_id"))
-            .agg(max(struct(col("ts"), col("event_id"),
-              col("event_type"))).as("f"))
-            .select(col("user_id"), col("f.ts").as("ts"),
-              col("f.event_id").as("event_id"),
-              col("f.event_type").as("event_type"))
-          val priorLast = mergeLast(StateFold.readOr(spark, lastDir, b))
+          val priorLast =
+            mergeLast(StateFold.readOr(batch.sparkSession, last.dir, b))
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
           val inPairs = b
@@ -1453,23 +1351,16 @@ object Streams {
             .select(col("from_type"), col("to_type"))
           // counts delta first (it reads the pre-batch frontier), then
           // the frontier delta extends the log
-          StateFold.append(inPairs.unionByName(boundary)
+          counts.add(inPairs.unionByName(boundary)
             .groupBy(col("from_type"), col("to_type"))
-            .agg(count(lit(1)).as("n")), cntDir)
-          StateFold.maybeCompact(spark, cntDir)(
-            _.groupBy(col("from_type"), col("to_type"))
-              .agg(sum(col("n")).as("n")))
-          val lasts = b.withColumn("rn", row_number().over(
+            .agg(count(lit(1)).as("n")))
+          last.add(b.withColumn("rn", row_number().over(
               org.apache.spark.sql.expressions.Window
                 .partitionBy(col("user_id"))
                 .orderBy(col("ts").desc, col("event_id").desc)))
-            .filter(col("rn") === 1).drop("rn")
-          StateFold.append(lasts, lastDir)
-          StateFold.maybeCompact(spark, lastDir)(mergeLast)
+            .filter(col("rn") === 1).drop("rn"))
         }
-        graft.operators.Analytics.transReport(ss.read.parquet(cntDir)
-          .groupBy(col("from_type"), col("to_type"))
-          .agg(sum(col("n")).as("n")))
+        graft.operators.Analytics.transReport(counts.state(ss))
       }
     },
 
@@ -1488,24 +1379,16 @@ object Streams {
       graft.operators.Analytics.x156OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val stDir = graft.Scratch.path(s"graft_stdrift_v1_${
-          graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "documents.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
+        val Seq(stDir) = fresh(d, "documents", "stdrift_v1")
+        val lengths = new StateFold.Log(stDir,
+          _.groupBy(col("source"), col("v")).agg(sum(col("c")).as("c")))
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): per-batch counts APPEND; the sum-merge
-          // runs at read time / compaction
-          StateFold.append(batch
+          lengths.add(batch
             .groupBy(col("source"), col("n_chars").as("v"))
-            .agg(count(lit(1)).as("c")), stDir)
-          StateFold.maybeCompact(spark, stDir)(
-            _.groupBy(col("source"), col("v")).agg(sum(col("c")).as("c")))
+            .agg(count(lit(1)).as("c")))
         }
         graft.operators.Analytics.ksReport(
-          graft.operators.Analytics.lengthEcdfGridFrom(
-            ss.read.parquet(stDir)
-              .groupBy(col("source"), col("v")).agg(sum(col("c")).as("c"))))
+          graft.operators.Analytics.lengthEcdfGridFrom(lengths.state(ss)))
       }
     },
 
@@ -1525,22 +1408,13 @@ object Streams {
       graft.operators.TextAnalysis.x174OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val stDir = graft.Scratch.path(s"graft_stcalib_v1_${
-          graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "documents.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
-        drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): per-batch bin partials APPEND; the
-          // sum-merge runs at read time / compaction
-          StateFold.append(
-            graft.operators.TextAnalysis.calibrationBinDelta(batch), stDir)
-          StateFold.maybeCompact(spark, stDir)(_.groupBy(col("bin"))
-            .agg(sum(col("n")).as("n"), sum(col("p")).as("p")))
-        }
-        graft.operators.TextAnalysis.pavReport(ss.read.parquet(stDir)
-          .groupBy(col("bin"))
+        val Seq(stDir) = fresh(d, "documents", "stcalib_v1")
+        val bins = new StateFold.Log(stDir, _.groupBy(col("bin"))
           .agg(sum(col("n")).as("n"), sum(col("p")).as("p")))
+        drain(replay(ss, stage)) { batch =>
+          bins.add(graft.operators.TextAnalysis.calibrationBinDelta(batch))
+        }
+        graft.operators.TextAnalysis.pavReport(bins.state(ss))
       }
     },
 
@@ -1559,20 +1433,13 @@ object Streams {
       graft.operators.Classic.x175OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "orders", "o_orderkey", "ordsplit")
-        val stDir = graft.Scratch.path(s"graft_sttrend_v1_${
-          graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "orders.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
+        val Seq(stDir) = fresh(d, "orders", "sttrend_v1")
+        val weeks = new StateFold.Log(stDir,
+          _.groupBy(col("w")).agg(sum(col("cents")).as("cents")))
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): per-batch weekly cents APPEND; the integer
-          // sum-merge runs at read time / compaction
-          StateFold.append(graft.operators.Classic.weeklyCents(batch), stDir)
-          StateFold.maybeCompact(spark, stDir)(
-            _.groupBy(col("w")).agg(sum(col("cents")).as("cents")))
+          weeks.add(graft.operators.Classic.weeklyCents(batch))
         }
-        graft.operators.Classic.theilSenReport(ss.read.parquet(stDir)
-          .groupBy(col("w")).agg(sum(col("cents")).as("cents")))
+        graft.operators.Classic.theilSenReport(weeks.state(ss))
       }
     },
 
@@ -1591,21 +1458,13 @@ object Streams {
       graft.operators.Mining.x183OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val stDir = graft.Scratch.path(s"graft_stpack_v1_${
-          graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "documents.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
+        val Seq(stDir) = fresh(d, "documents", "stpack_v1")
+        val buckets = new StateFold.Log(stDir,
+          _.groupBy(col("l")).agg(sum(col("n_docs")).as("n_docs")))
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): per-batch bucket partials APPEND; the
-          // sum-merge runs at read time / compaction
-          StateFold.append(
-            graft.operators.Mining.packingBucketDelta(batch), stDir)
-          StateFold.maybeCompact(spark, stDir)(
-            _.groupBy(col("l")).agg(sum(col("n_docs")).as("n_docs")))
+          buckets.add(graft.operators.Mining.packingBucketDelta(batch))
         }
-        graft.operators.Mining.packingPlan(ss.read.parquet(stDir)
-          .groupBy(col("l")).agg(sum(col("n_docs")).as("n_docs")))
+        graft.operators.Mining.packingPlan(buckets.state(ss))
       }
     },
 
@@ -1625,22 +1484,17 @@ object Streams {
       graft.operators.Dedup.x184OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "part", "p_partkey", "partsplit")
-        val stDir = graft.Scratch.path(s"graft_stgolden_v1_${
-          graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "part.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
-        val namesDir = s"$stDir/names"; val edgesDir = s"$stDir/edges"
-        val mergeNames = (df: DataFrame) => df.groupBy(col("name"))
+        val Seq(stDir) = fresh(d, "part", "stgolden_v1")
+        val names = new StateFold.Log(s"$stDir/names", _.groupBy(col("name"))
           .agg(sum(col("n_parts")).as("n_parts"),
             min(col("min_cents")).as("min_cents"),
-            max(col("max_cents")).as("max_cents"))
+            max(col("max_cents")).as("max_cents")))
+        // a pair lands exactly once, in the batch where its later
+        // endpoint first appears, so the edge log is already
+        // duplicate-free across batches; its distinct is replay armor
+        val edges = new StateFold.Log(s"$stDir/edges", _.distinct())
         drain(replay(ss, stage)) { batch =>
           val spark = batch.sparkSession
-          // O(Δ) folds (r13): survivorship partials and new edges
-          // APPEND (a pair lands exactly once, in the batch where its
-          // later endpoint first appears — so the edge log is already
-          // duplicate-free across batches); the sum/min/max merge runs
-          // at read time / compaction
           // checkpoint under AQE (StateFold.withWriteAqe): the frozen
           // layout feeds the names APPEND below, and without AQE the
           // agg's 8 pinned shuffle partitions land 8 near-empty state
@@ -1649,7 +1503,7 @@ object Streams {
             graft.operators.Dedup.nameStatsDelta(batch)
               .localCheckpoint() // read twice (new-name probe + append)
           }
-          val prior = StateFold.readOr(spark, namesDir, delta)
+          val prior = StateFold.readOr(spark, names.dir, delta)
           // (b) first: new names = in delta, absent from prior state
           val newNames = delta.select(col("name"))
             .join(prior.select(col("name")), Seq("name"), "left_anti")
@@ -1671,18 +1525,15 @@ object Streams {
             .filter(graft.functions.Num.roundOut(
               graft.plans.JaroWinkler(col("src"), col("dst")), 6)
               >= 0.85)
-          StateFold.append(newEdges, edgesDir)
-          StateFold.maybeCompact(spark, edgesDir)(_.distinct())
+          edges.add(newEdges)
           // (a) then: the survivorship partials extend the names log
-          StateFold.append(delta, namesDir)
-          StateFold.maybeCompact(spark, namesDir)(mergeNames)
+          names.add(delta)
         }
-        val half = ss.read.parquet(edgesDir).distinct()
+        val half = edges.state(ss)
         val sym = half
           .union(half.select(col("dst").as("src"), col("src").as("dst")))
           .distinct().localCheckpoint()
-        graft.operators.Dedup.goldenRecords(sym,
-          mergeNames(ss.read.parquet(namesDir)))
+        graft.operators.Dedup.goldenRecords(sym, names.state(ss))
       }
     },
 
@@ -1715,10 +1566,7 @@ object Streams {
       graft.operators.Merge.x191OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageEventsTimeSplit(ss, d)
-        val stDir = graft.Scratch.path(s"graft_stscd2_v2_${
-          graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "events.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
+        val Seq(stDir) = fresh(d, "events", "stscd2_v2")
         val runsDir = s"$stDir/runs"
         drain(replay(ss, stage)) { batch =>
           val spark = batch.sparkSession
@@ -1790,23 +1638,14 @@ object Streams {
       graft.operators.Mining.x196OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val stDir = graft.Scratch.path(s"graft_stbpe_v1_${
-          graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "documents.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
+        val Seq(stDir) = fresh(d, "documents", "stbpe_v1")
+        val words = new StateFold.Log(stDir,
+          _.groupBy(col("word")).agg(sum(col("wc")).as("wc")))
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) fold (r13): per-batch word counts APPEND; the
-          // sum-merge runs at read time / compaction
-          StateFold.append(
-            graft.operators.Mining.bpeWordCounts(batch), stDir)
-          StateFold.maybeCompact(spark, stDir)(
-            _.groupBy(col("word")).agg(sum(col("wc")).as("wc")))
+          words.add(graft.operators.Mining.bpeWordCounts(batch))
         }
         val (_, reports) = graft.operators.Mining.bpeTrain(
-          graft.operators.Mining.bpeSym0FromCounts(
-            ss.read.parquet(stDir)
-              .groupBy(col("word")).agg(sum(col("wc")).as("wc"))),
+          graft.operators.Mining.bpeSym0FromCounts(words.state(ss)),
           graft.operators.Mining.BpeBudget)
         reports.reduce(_ unionByName _).orderBy(col("round"))
       }
@@ -1834,20 +1673,12 @@ object Streams {
       graft.operators.Mining.x199OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val stDir = graft.Scratch.path(s"graft_stcur_v1_${
-          graft.ContentKey.key(
-            java.nio.file.Paths.get(d, "documents.parquet"))}")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(stDir))
+        val Seq(stDir) = fresh(d, "documents", "stcur_v1")
+        val meta = new StateFold.Log(stDir, identity)
         drain(replay(ss, stage)) { batch =>
-          // O(Δ) fold (r13): the metadata frame is PURELY additive —
-          // each doc contributes exactly one row, so the log IS the
-          // state (identity merge, no compaction read-amplification
-          // concern beyond file count; the batch never reads the dir)
-          StateFold.append(
-            graft.operators.Mining.curationFrame(batch), stDir)
-          StateFold.maybeCompact(batch.sparkSession, stDir)(identity)
+          meta.add(graft.operators.Mining.curationFrame(batch))
         }
-        graft.operators.Mining.curationReport(ss.read.parquet(stDir))
+        graft.operators.Mining.curationReport(meta.state(ss))
       }
     },
 
@@ -1873,29 +1704,18 @@ object Streams {
       graft.operators.Mining.x200OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val key = graft.ContentKey.key(
-          java.nio.file.Paths.get(d, "documents.parquet"))
-        val trDir = graft.Scratch.path(s"graft_stcontam_tr_v1_$key")
-        val evDir = graft.Scratch.path(s"graft_stcontam_ev_v1_$key")
-        Seq(trDir, evDir).map(java.nio.file.Paths.get(_))
-          .foreach(graft.Publish.deleteTree)
+        val Seq(trDir, evDir) =
+          fresh(d, "documents", "stcontam_tr_v1", "stcontam_ev_v1")
+        val train = new StateFold.Log(trDir, _.distinct())
+        val eval = new StateFold.Log(evDir, identity)
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) folds (r13): the TRAIN side appends the batch's OWN
-          // distinct grams (the set-union dedup across batches moves to
-          // read time / compaction); the EVAL side is purely additive —
-          // positioned rows, identity merge
           val cg = graft.operators.Mining.contamGrams(batch)
             .localCheckpoint() // both folds share one gram pass
-          StateFold.append(
-            cg.filter(col("is_train")).select(col("g")).distinct(), trDir)
-          StateFold.maybeCompact(spark, trDir)(_.distinct())
-          StateFold.append(cg.filter(!col("is_train"))
-            .select(col("doc_id"), col("pos"), col("g")), evDir)
-          StateFold.maybeCompact(spark, evDir)(identity)
+          train.add(cg.filter(col("is_train")).select(col("g")).distinct())
+          eval.add(cg.filter(!col("is_train"))
+            .select(col("doc_id"), col("pos"), col("g")))
         }
-        graft.operators.Mining.contamReport(
-          ss.read.parquet(trDir).distinct(), ss.read.parquet(evDir))
+        graft.operators.Mining.contamReport(train.state(ss), eval.state(ss))
       }
     },
 
@@ -1922,19 +1742,14 @@ object Streams {
       graft.operators.Quality.x204OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val key = graft.ContentKey.key(
-          java.nio.file.Paths.get(d, "documents.parquet"))
-        val ceDir = graft.Scratch.path(s"graft_stqcls_ce_v1_$key")
-        val lbDir = graft.Scratch.path(s"graft_stqcls_lb_v1_$key")
-        val bsDir = graft.Scratch.path(s"graft_stqcls_bs_v1_$key")
-        Seq(ceDir, lbDir, bsDir).map(java.nio.file.Paths.get(_))
-          .foreach(graft.Publish.deleteTree)
+        val Seq(ceDir, lbDir, bsDir) = fresh(d, "documents",
+          "stqcls_ce_v1", "stqcls_lb_v1", "stqcls_bs_v1")
+        val cells = new StateFold.Log(ceDir, identity)
+        val labels = new StateFold.Log(lbDir, identity)
+        val binStats = new StateFold.Log(bsDir, _.groupBy(col("b"))
+          .agg(sum(col("bin_tokens")).as("bin_tokens"),
+            sum(col("bin_docs")).as("bin_docs")))
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // O(Δ) folds (r13): feature cells and labels are purely
-          // additive (each doc lands in exactly one batch — identity
-          // merge); bin occupancy partials sum-merge at read time /
-          // compaction. No batch ever reads the state dirs.
           // One tokenize pass per batch (r16): the cell fold and the
           // bin-stat fold both derive from the same checkpointed
           // counts instead of re-tokenizing the text. Since r17 the
@@ -1945,16 +1760,9 @@ object Streams {
           val tokb = graft.operators.Quality.binnedCounts(
             graft.operators.Quality.tokenCounts(batch))
             .localCheckpoint()
-          StateFold.append(
-            graft.operators.Quality.featureCellsFromBinned(tokb), ceDir)
-          StateFold.maybeCompact(spark, ceDir)(identity)
-          StateFold.append(graft.operators.Quality.labelTable(batch), lbDir)
-          StateFold.maybeCompact(spark, lbDir)(identity)
-          StateFold.append(
-            graft.operators.Quality.binStatsFromBinned(tokb), bsDir)
-          StateFold.maybeCompact(spark, bsDir)(_.groupBy(col("b"))
-            .agg(sum(col("bin_tokens")).as("bin_tokens"),
-              sum(col("bin_docs")).as("bin_docs")))
+          cells.add(graft.operators.Quality.featureCellsFromBinned(tokb))
+          labels.add(graft.operators.Quality.labelTable(batch))
+          binStats.add(graft.operators.Quality.binStatsFromBinned(tokb))
         }
         // retrain to the VALIDATED stopping round (r14): the chosen
         // round is a once-per-content hyperparameter off the persisted
@@ -1964,11 +1772,9 @@ object Streams {
         graft.operators.Quality.serveModel(
           graft.operators.Quality.modelTable(
             graft.operators.Quality.trainFromCells(
-              ss.read.parquet(ceDir), ss.read.parquet(lbDir),
+              cells.state(ss), labels.state(ss),
               graft.operators.Quality.chosenRound(ss, d)),
-            ss.read.parquet(bsDir).groupBy(col("b"))
-              .agg(sum(col("bin_tokens")).as("bin_tokens"),
-                sum(col("bin_docs")).as("bin_docs"))))
+            binStats.state(ss)))
       }
     },
 
@@ -2000,33 +1806,24 @@ object Streams {
       graft.operators.Quality.x208OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val key = graft.ContentKey.key(
-          java.nio.file.Paths.get(d, "documents.parquet"))
-        val ceDir = graft.Scratch.path(s"graft_sthm_ce_v1_$key")
-        val lbDir = graft.Scratch.path(s"graft_sthm_lb_v1_$key")
-        val mmDir = graft.Scratch.path(s"graft_sthm_mm_v1_$key")
-        Seq(ceDir, lbDir, mmDir).map(java.nio.file.Paths.get(_))
-          .foreach(graft.Publish.deleteTree)
+        val Seq(ceDir, lbDir, mmDir) = fresh(d, "documents",
+          "sthm_ce_v1", "sthm_lb_v1", "sthm_mm_v1")
+        val cellLog = new StateFold.Log(ceDir, identity)
+        val labelLog = new StateFold.Log(lbDir, identity)
+        val mixLog = new StateFold.Log(mmDir, identity)
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // all three folds purely additive (each doc in exactly one
-          // batch) — identity merges, O(Δ) appends
-          StateFold.append(
-            graft.operators.Quality.featureCells(batch), ceDir)
-          StateFold.maybeCompact(spark, ceDir)(identity)
-          StateFold.append(graft.operators.Quality.labelTable(batch), lbDir)
-          StateFold.maybeCompact(spark, lbDir)(identity)
-          StateFold.append(graft.operators.Quality.mixMeta(batch), mmDir)
-          StateFold.maybeCompact(spark, mmDir)(identity)
+          cellLog.add(graft.operators.Quality.featureCells(batch))
+          labelLog.add(graft.operators.Quality.labelTable(batch))
+          mixLog.add(graft.operators.Quality.mixMeta(batch))
         }
-        val cells = ss.read.parquet(ceDir)
-        val labels = ss.read.parquet(lbDir)
+        val cells = cellLog.state(ss)
+        val labels = labelLog.state(ss)
         // st33's r14 rule: the retrain-at-serve stops at the validated
         // round (persisted hyperparameter, re-derived by x208's oracle)
         graft.operators.Quality.hardnessMix(
           graft.operators.Quality.trainFromCells(cells, labels,
             graft.operators.Quality.chosenRound(ss, d)),
-          cells, labels, ss.read.parquet(mmDir))
+          cells, labels, mixLog.state(ss))
       }
     },
 
@@ -2053,26 +1850,19 @@ object Streams {
       graft.operators.Tokens.x216OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val key = graft.ContentKey.key(
-          java.nio.file.Paths.get(d, "documents.parquet"))
-        val ixDir = graft.Scratch.path(s"graft_sttag_ix_v1_$key")
-        val mdDir = graft.Scratch.path(s"graft_sttag_md_v1_$key")
-        Seq(ixDir, mdDir).map(java.nio.file.Paths.get(_))
-          .foreach(graft.Publish.deleteTree)
+        val Seq(ixDir, mdDir) =
+          fresh(d, "documents", "sttag_ix_v1", "sttag_md_v1")
+        val index = new StateFold.Log(ixDir, identity)
+        val meta = new StateFold.Log(mdDir, identity)
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // both folds purely additive — identity merges, O(Δ) appends
-          StateFold.append(batch.select(col("doc_id"),
+          index.add(batch.select(col("doc_id"),
             posexplode(graft.functions.Text.tokens(col("text")))
-              .as(Seq("i", "word"))), ixDir)
-          StateFold.maybeCompact(spark, ixDir)(identity)
-          StateFold.append(
-            batch.select(col("doc_id"), col("source")), mdDir)
-          StateFold.maybeCompact(spark, mdDir)(identity)
+              .as(Seq("i", "word"))))
+          meta.add(batch.select(col("doc_id"), col("source")))
         }
         graft.operators.Tokens.taggingReport(
-          graft.operators.Tokens.taggedSpansFrom(ss.read.parquet(ixDir)),
-          ss.read.parquet(mdDir))
+          graft.operators.Tokens.taggedSpansFrom(index.state(ss)),
+          meta.state(ss))
       }
     },
 
@@ -2101,19 +1891,14 @@ object Streams {
       graft.operators.Corpus.x41OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val key = graft.ContentKey.key(
-          java.nio.file.Paths.get(d, "documents.parquet"))
-        val ixDir = graft.Scratch.path(s"graft_stspan_ix_v1_$key")
-        graft.Publish.deleteTree(java.nio.file.Paths.get(ixDir))
+        val Seq(ixDir) = fresh(d, "documents", "stspan_ix_v1")
+        val index = new StateFold.Log(ixDir, identity)
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          // purely additive positional index — identity merge, O(Δ)
-          StateFold.append(batch.select(col("doc_id"),
+          index.add(batch.select(col("doc_id"),
             posexplode(graft.functions.Text.tokens(col("text")))
-              .as(Seq("i", "word"))), ixDir)
-          StateFold.maybeCompact(spark, ixDir)(identity)
+              .as(Seq("i", "word"))))
         }
-        val base = ss.read.parquet(ixDir)
+        val base = index.state(ss)
           .groupBy(col("doc_id"))
           .agg(transform(
             array_sort(collect_list(struct(col("i"), col("word")))),
@@ -2155,12 +1940,8 @@ object Streams {
       graft.operators.Corpus.x146OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageCcEdgesSplit(ss, d)
-        val key = graft.ContentKey.key(
-          java.nio.file.Paths.get(d, "documents.parquet"))
-        val labDir = graft.Scratch.path(s"graft_stccf_lab_v1_$key")
-        val memDir = graft.Scratch.path(s"graft_stccf_mem_v1_$key")
-        Seq(labDir, memDir).map(java.nio.file.Paths.get(_))
-          .foreach(graft.Publish.deleteTree)
+        val Seq(labDir, memDir) =
+          fresh(d, "documents", "stccf_lab_v1", "stccf_mem_v1")
         drain(replay(ss, stage))(frontierCcBatch(_, labDir, memDir))
         graft.operators.Corpus.ccReport(
           KeyedFold.readAll(ss, labDir,
@@ -2203,34 +1984,28 @@ object Streams {
       graft.operators.Tokens.x225OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val key = graft.ContentKey.key(
-          java.nio.file.Paths.get(d, "documents.parquet"))
-        val tgDir = graft.Scratch.path(s"graft_stdual_tg_v1_$key")
-        val egDir = graft.Scratch.path(s"graft_stdual_eg_v1_$key")
-        val mdDir = graft.Scratch.path(s"graft_stdual_md_v1_$key")
-        Seq(tgDir, egDir, mdDir).map(java.nio.file.Paths.get(_))
-          .foreach(graft.Publish.deleteTree)
+        val Seq(tgDir, egDir, mdDir) = fresh(d, "documents",
+          "stdual_tg_v1", "stdual_eg_v1", "stdual_md_v1")
+        val trainGrams = new StateFold.Log(tgDir, _.distinct())
+        val evalGrams = new StateFold.Log(egDir, identity)
+        val meta = new StateFold.Log(mdDir, identity)
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
           val cg = graft.operators.Mining.contamGrams(batch)
             .localCheckpoint() // both gram folds share one text pass
-          StateFold.append(cg.filter(col("is_train"))
-            .select(col("doc_id"), col("g")).distinct(), tgDir)
-          StateFold.maybeCompact(spark, tgDir)(_.distinct())
-          StateFold.append(cg.filter(!col("is_train"))
-            .select(col("doc_id"), col("pos"), col("g")), egDir)
-          StateFold.maybeCompact(spark, egDir)(identity)
-          StateFold.append(batch.select(col("doc_id"),
+          trainGrams.add(cg.filter(col("is_train"))
+            .select(col("doc_id"), col("g")).distinct())
+          evalGrams.add(cg.filter(!col("is_train"))
+            .select(col("doc_id"), col("pos"), col("g")))
+          meta.add(batch.select(col("doc_id"),
             (graft.functions.Text.fingerprint(col("text")) % 100 < 90)
               .as("is_train"),
             size(graft.functions.Text.tokens(col("text"))).cast("long")
-              .as("n_tokens")), mdDir)
-          StateFold.maybeCompact(spark, mdDir)(identity)
+              .as("n_tokens")))
         }
         // no checkpoint: the artifact is already a stable parquet scan,
         // read once by the frontier and once by the as-of projection
         val lcp = graft.operators.Tokens.suffixLcpArtifact(ss, d)
-        val md = ss.read.parquet(mdDir).localCheckpoint() // split + base
+        val md = meta.state(ss).localCheckpoint() // split + base
         val hp = graft.operators.Tokens.exactContamFrontier(
           graft.operators.Tokens.islandMembers(lcp, 7),
           md.select(col("doc_id"), col("is_train")))
@@ -2243,7 +2018,7 @@ object Streams {
           .localCheckpoint()
         graft.operators.Tokens.dualArmContam(
           hp, asOf,
-          ss.read.parquet(tgDir).distinct(), ss.read.parquet(egDir),
+          trainGrams.state(ss), evalGrams.state(ss),
           md.filter(!col("is_train") && col("n_tokens") >= 1)
             .select(col("doc_id"), col("n_tokens")))
       }
@@ -2277,28 +2052,22 @@ object Streams {
       graft.operators.Tokens.x231OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
         val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
-        val key = graft.ContentKey.key(
-          java.nio.file.Paths.get(d, "documents.parquet"))
-        val mdDir = graft.Scratch.path(s"graft_stwf_md_v1_$key")
-        val sgDir = graft.Scratch.path(s"graft_stwf_sg_v1_$key")
-        Seq(mdDir, sgDir).map(java.nio.file.Paths.get(_))
-          .foreach(graft.Publish.deleteTree)
+        val Seq(mdDir, sgDir) =
+          fresh(d, "documents", "stwf_md_v1", "stwf_sg_v1")
+        val meta = new StateFold.Log(mdDir, identity)
+        val sigs = new StateFold.Log(sgDir, identity)
         drain(replay(ss, stage)) { batch =>
-          val spark = batch.sparkSession
-          StateFold.append(batch.select(col("doc_id"), col("source"),
+          meta.add(batch.select(col("doc_id"), col("source"),
             md5(col("text")).as("h"),
             size(graft.functions.Text.tokens(col("text"))).cast("long")
-              .as("ntok")), mdDir)
-          StateFold.maybeCompact(spark, mdDir)(identity)
-          StateFold.append(
-            graft.operators.Dedup.portableSigs(batch), sgDir)
-          StateFold.maybeCompact(spark, sgDir)(identity)
+              .as("ntok")))
+          sigs.add(graft.operators.Dedup.portableSigs(batch))
         }
-        val md = ss.read.parquet(mdDir).localCheckpoint()
+        val md = meta.state(ss).localCheckpoint()
         val surv = md.groupBy(col("h"))
           .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
         val ndCas = graft.operators.Dedup.neardupCasualties(
-          ss.read.parquet(sgDir).join(surv, "doc_id"))
+          sigs.state(ss).join(surv, "doc_id"))
         graft.operators.Tokens.waterfallRollup(md, ndCas,
           graft.operators.Tokens.wfslcpArtifact(ss, d))
       }

@@ -129,7 +129,31 @@ class Round13Spec extends AnyFunSuite {
     // post-compaction appends keep folding
     streaming.StateFold.append(d1, dir)
     assert(state() == Map("a" -> 5L, "b" -> 4L, "c" -> 4L))
-    Publish.deleteTree(java.nio.file.Paths.get(dir))
+
+    // a Log folds under its one merge: opening it empties `dir`, each
+    // add journals exactly one append, and forced compaction (maxFiles =
+    // 0: compact after every add) leaves the state rows unchanged
+    val eagerDir = Scratch.path("r13_compact_probe_eager")
+    val n0 = streaming.StateFold.events.size
+    val plain = new streaming.StateFold.Log(dir, merge)
+    assert(streaming.StateFold.partFiles(dir).isEmpty,
+      "opening a log over a non-empty directory must empty it")
+    val eager = new streaming.StateFold.Log(eagerDir, merge, maxFiles = 0)
+    val d3 = Seq(("b", 5L), ("d", 6L)).toDF("k", "v")
+    Seq(d1, d2, d3).foreach { d => plain.add(d); eager.add(d) }
+    def rows(l: streaming.StateFold.Log) = l.state(spark).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(rows(plain) == Map("a" -> 4L, "b" -> 7L, "c" -> 4L, "d" -> 6L))
+    assert(rows(eager) == rows(plain),
+      "forced compaction must not change the merged state")
+    assert(spark.read.parquet(eagerDir).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).sorted.toSeq ==
+      rows(plain).toSeq.sorted, "compaction must fold the log with its merge")
+    def kinds(d: String) =
+      streaming.StateFold.events.drop(n0).filter(_.dir == d).map(_.kind)
+    assert(kinds(dir) == Seq.fill(3)("append"))
+    assert(kinds(eagerDir) == Seq.fill(3)(Seq("append", "compact")).flatten)
+    Seq(dir, eagerDir).foreach(p => Publish.deleteTree(java.nio.file.Paths.get(p)))
   }
 
   // ---- composed streaming curation loop (VERDICT r12 item 2) ----
