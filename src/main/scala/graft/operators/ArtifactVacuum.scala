@@ -5,16 +5,16 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.QueryDef
+import graft.{Artifacts, QueryDef}
 
 /** Retention sweep for the content-keyed artifact warehouse (VERDICT r11
   * item 2) — the VACUUM every production artifact store has. The warehouse
   * accumulates superseded generations forever: every source regeneration
   * changes the content key, and every `codeVersion`/`builderVersion` bump
   * strands the previous directory. This operator builds the LIVE manifest
-  * (registered builder families × live data roots × current content keys),
-  * classifies every warehouse entry against it, and plans — or, via
-  * [[vacuum]], performs — orphan deletion.
+  * (the [[graft.Artifacts]] families × live data roots × current content
+  * keys), classifies every warehouse entry against it, and plans — or,
+  * via [[vacuum]], performs — orphan deletion.
   *
   * Safety invariants (pinned in Round12Spec):
   *   - a LIVE artifact (current version, current key of ANY live root) is
@@ -29,112 +29,12 @@ import graft.QueryDef
   *
   * Scale: this is a metadata operator — one warehouse listing (at cluster
   * scale, the table-format manifest / metastore listing, not a filesystem
-  * walk) against a registry that is code, and per-root content keys that
+  * walk) against a registry that is code ([[graft.Artifacts.all]], the
+  * only place an artifact name is made), and per-root content keys that
   * are file-stat digests. Nothing here touches data files except the
   * deletes themselves.
   */
 object ArtifactVacuum {
-
-  /** One build-once artifact family: `stem` is the name prefix shared by
-    * ALL generations (up to but excluding the version tail), `prefix` the
-    * current-version prefix that a live key completes. An entry matching
-    * `stem` but not `prefix` is a stale VERSION; matching `prefix` with a
-    * non-live key is stale CONTENT. */
-  final case class Family(name: String, srcTable: String,
-      stem: String, prefix: String)
-
-  /** The [[DerivedTable]]-managed families as (tag, srcTable,
-    * builderVersion) — Round12Spec's lint parses every DerivedTable call
-    * site in main source and asserts THIS table matches exactly, so a new
-    * builder cannot land without vacuum coverage. */
-  private[graft] val derivedSpecs: Seq[(String, String, Int)] = Seq(
-    ("jlproj", "embeddings", 1),
-    ("ivf4", "embeddings", 2),
-    ("kmlists", "embeddings", 1),
-    ("kmeans", "embeddings", 1),
-    ("pqbook", "embeddings", 1),
-    ("ivf", "embeddings", 2),
-    ("pqcodes", "embeddings", 1),
-    ("lsh", "embeddings", 1),
-    ("fptable", "documents", 1),
-    ("langprof", "documents", 1),
-    ("traingrams", "documents", 1),
-    ("shingles", "documents", 1),
-    ("pminhash", "documents", 1),
-    ("psimhash", "documents", 1),
-    ("winnow", "documents", 1),
-    ("dupclusters", "documents", 1),
-    ("minhash", "documents", 1),
-    ("simhash", "documents", 1),
-    ("ppjprefix", "documents", 1),
-    ("bigramlm_uni", "documents", 1),
-    ("bigramlm_top", "documents", 1),
-    ("bpemerges", "documents", 2),
-    ("qweights", "documents", 2),
-    ("qweightstr", "documents", 1),
-    ("qvalcurve", "documents", 1),
-    ("qweightsval", "documents", 1),
-    ("bpesyms", "documents", 2),
-    ("bpemerge1", "documents", 1),
-    ("bpemerge2", "documents", 1),
-    ("bpeseg", "documents", 1),
-    ("bloombits", "documents", 1),
-    ("aggmv", "events", 1),
-    ("aggmv_stale", "events", 1),
-    ("tokens", "documents", 1),
-    ("slcp", "documents", 2),
-    ("rwslcp", "documents", 1),
-    ("wfslcp", "documents", 2),
-    ("capsimhash", "documents", 1),
-    ("lplabels", "documents", 1),
-    ("geopoints", "events", 1))
-
-  /** The full registry of build-once families. A Round12Spec lint parses
-    * every `DerivedTable(...)` call site and every `Warehouse.path`
-    * literal in main source and fails when a builder is missing here —
-    * the registry cannot silently drift from the code. */
-  val families: Seq[Family] = derivedSpecs.map { case (tag, src, bv) =>
-    Family(tag, src, s"graft_${tag}_", DerivedTable.livePrefix(tag, bv))
-  } ++ Seq(
-    // direct Warehouse builders
-    Family("fact", "events", "graft_fact_", "graft_fact_v2_"),
-    Family("events_zorder", "events",
-      "graft_events_zorder_", "graft_events_zorder_v1_"),
-    Family("events_byday", "events",
-      "graft_events_byday_", "graft_events_byday_v2_"),
-    Family("events_frag", "events",
-      "graft_events_frag_", "graft_events_frag_v1_"),
-    Family("events_compact", "events",
-      "graft_events_compact_", "graft_events_compact_v1_"),
-    Family("time_travel", "events", "graft_tt_", "graft_tt_v1_"),
-    Family("csv_sink", "events", "graft_csv_", "graft_csv_v2_"),
-    Family("jsonl_sink", "documents", "graft_jsonl_", "graft_jsonl_v2_"),
-    Family("orc_sink", "documents", "graft_orc_", "graft_orc_v1_"),
-    Family("dynamic_overwrite", "events",
-      "graft_dynover_", "graft_dynover_v1_"),
-    Family("schema_evolution", "documents",
-      "graft_schemaevo_", "graft_schemaevo_v1_"),
-    Family("gdpr_rewrite", "events", "graft_gdpr_", "graft_gdpr_v1_"),
-    Family("bucketed_stats", "events", "g_user_stats_", "g_user_stats_v2_"),
-    Family("bucketed_purch", "events", "g_user_purch_", "g_user_purch_v2_"),
-    // stream staging (build-once micro-batch layouts)
-    Family("stage_events", "events", "graft_stream_v", "graft_stream_v2_"),
-    Family("stage_events_dup", "events",
-      "graft_stream_dup_", "graft_stream_dup_v1_"),
-    Family("stage_events_split", "events",
-      "graft_stream_split_", "graft_stream_split_v1_"),
-    Family("stage_events_tsplit", "events",
-      "graft_stream_tsplit_", "graft_stream_tsplit_v1_"),
-    Family("stage_docs_split", "documents",
-      "graft_stream_docsplit_", "graft_stream_docsplit_v1_"),
-    Family("stage_orders_split", "orders",
-      "graft_stream_ordsplit_", "graft_stream_ordsplit_v1_"),
-    Family("stage_part_split", "part",
-      "graft_stream_partsplit_", "graft_stream_partsplit_v1_"),
-    Family("stage_vec_split", "embeddings",
-      "graft_stream_vecsplit_", "graft_stream_vecsplit_v1_"),
-    Family("stage_cc_split", "documents",
-      "graft_stream_ccsplit_", "graft_stream_ccsplit_v1_"))
 
   /** The data roots whose artifacts are LIVE: the queried root plus every
     * sibling directory that holds ANY registered source table (the local
@@ -144,7 +44,7 @@ object ArtifactVacuum {
     * e.g. events.parquet still leases its events-derived artifacts. */
   def liveRoots(dir: String): Seq[Path] = {
     val d = Paths.get(dir).toAbsolutePath
-    val srcTables = families.map(_.srcTable).distinct
+    val srcTables = Artifacts.all.map(_.srcTable).distinct
     val sibs =
       if (d.getParent != null && Files.isDirectory(d.getParent)) {
         val l = Files.list(d.getParent)
@@ -166,12 +66,12 @@ object ArtifactVacuum {
   }
 
   /** Every live artifact name for the given roots. */
-  def liveNames(roots: Seq[Path]): Map[String, Family] =
+  def liveNames(roots: Seq[Path]): Map[String, Artifacts.Family] =
     (for {
-      f <- families
+      f <- Artifacts.all
       r <- roots
       k <- keyOf(r, f.srcTable)
-    } yield (f.prefix + k) -> f).toMap
+    } yield f.dirName(k) -> f).toMap
 
   /** Classify every top-level warehouse entry. Classes: live,
     * stale_version, stale_content, scratch_live, scratch_stale,
@@ -179,7 +79,7 @@ object ArtifactVacuum {
   def classify(warehouseRoot: String,
       roots: Seq[Path]): Seq[(String, String, String)] = {
     val live = liveNames(roots)
-    val byStem = families.sortBy(-_.stem.length) // longest stem wins
+    val byStem = Artifacts.all.sortBy(-_.stem.length) // longest stem wins
     val entries = {
       val l = Files.list(Paths.get(warehouseRoot))
       try {
@@ -251,14 +151,13 @@ object ArtifactVacuum {
           es.count(_._2 == "stale_content").toLong)
       }
     val rows = for {
-      f <- families
+      f <- Artifacts.all
       r <- roots
       k <- keyOf(r, f.srcTable)
     } yield {
-      val liveDir = f.prefix + k
       val (sv, sc) = byFam.getOrElse(f.name, (0L, 0L))
-      Row(f.name, f.srcTable, r.getFileName.toString, liveDir,
-        Files.exists(Paths.get(graft.Warehouse.path(liveDir))), sv, sc, null)
+      Row(f.name, f.srcTable, r.getFileName.toString, f.dirName(k),
+        Files.exists(Paths.get(f.pathOf(k))), sv, sc, null)
     }
     val now = System.currentTimeMillis()
     val unknownRows = cls.filter(_._2 == "unknown").map { case (name, _, _) =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Num
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 import graft.functions.Text
 
 /** Corpus-preparation operators for the training-data pipeline: RAG-style
@@ -100,7 +100,7 @@ object Corpus {
     */
   private[graft] def lpPipeline(s: org.apache.spark.sql.SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     val e = lpEdges(s, d)
-    val labels = DerivedTable(s, d, "documents", "lplabels") {
+    val labels = DerivedTable(s, d, Artifacts.lplabels) {
       val l0 = e.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").cast("int").as("lbl"))
       def lpRound(l: DataFrame): DataFrame =
@@ -1228,7 +1228,7 @@ object Corpus {
       // bloom build folds 4 interpreted char hashes per distinct train
       // gram, which warm runs now skip entirely
       val trainGrams = TextAnalysis.trainGramTable(s, d)
-      val bloomDf = DerivedTable(s, d, "documents", "bloombits") {
+      val bloomDf = DerivedTable(s, d, Artifacts.bloombits) {
         trainGrams.agg(SketchAgg.bloomBits(col("g")).as("bits"))
       }
       val ev = tri.filter(col("split") =!= "train")
@@ -2973,9 +2973,9 @@ object Corpus {
     // one lazy build shared by the three persisted artifacts: the first
     // DerivedTable miss triggers `learned()` once; hits read parquet only
     lazy val built = learned()
-    val t1 = DerivedTable(s, d, "documents", "bpemerge1") { built._1 }
-    val t2 = DerivedTable(s, d, "documents", "bpemerge2") { built._2 }
-    val r2 = DerivedTable(s, d, "documents", "bpeseg") { built._3 }
+    val t1 = DerivedTable(s, d, Artifacts.bpemerge1) { built._1 }
+    val t2 = DerivedTable(s, d, Artifacts.bpemerge2) { built._2 }
+    val r2 = DerivedTable(s, d, Artifacts.bpeseg) { built._3 }
     (t1, t2, r2)
   }
 }

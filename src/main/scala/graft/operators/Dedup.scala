@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Num
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 import graft.functions.Text
 
 /** Deduplication suite for the training-data pipeline — exact, MinHash+LSH,
@@ -56,7 +56,7 @@ object Dedup {
     * instead of once per query is the production contract, and warm reads
     * skip it entirely). */
   private[operators] def shingleTable(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "documents", "shingles") {
+    DerivedTable(s, d, Artifacts.shingles) {
       shingled(Tables.documents(s, d))
     }
 
@@ -157,7 +157,7 @@ object Dedup {
     * x39's persisted content-keyed artifact, shared with x61's
     * incremental probe. */
   private[operators] def pminhashTable(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "documents", "pminhash") {
+    DerivedTable(s, d, Artifacts.pminhash) {
       portableSigs(Tables.documents(s, d))
     }
 
@@ -181,7 +181,7 @@ object Dedup {
     val tok = Tables.documents(s, d).select(col("doc_id"),
       explode(filter(array_distinct(Text.tokens(col("text"))),
         w => length(w) > 0)).as("tok"))
-    DerivedTable(s, d, "documents", "psimhash") { simhashBitsOf(tok) }
+    DerivedTable(s, d, Artifacts.psimhash) { simhashBitsOf(tok) }
   }
 
   /** The portable-SimHash bit pipeline over ANY (doc_id, tok) token set —
@@ -467,7 +467,7 @@ object Dedup {
     * `array_min(slice(...))` inside a let-bound lambda (no window
     * function, no shuffle), distinct per doc. */
   private[graft] def winnowTable(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "documents", "winnow") {
+    DerivedTable(s, d, Artifacts.winnow) {
       winnowFps(Tables.documents(s, d))
     }
 
@@ -498,7 +498,7 @@ object Dedup {
     * both x20 and x59 read the artifact — the "cluster table" every
     * production dedup pipeline stores next to its signature table. */
   private def dupClusterTable(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "documents", "dupclusters") {
+    DerivedTable(s, d, Artifacts.dupclusters) {
       connectedComponents(dupEdges(s, d))
     }
 
@@ -729,7 +729,7 @@ object Dedup {
       // whole-stage codegen'd, unlike nested higher-order lambdas (which
       // are interpreted per element and generate huge methods).
       val p = 2147483647L
-      val sets = DerivedTable(s, d, "documents", "minhash") {
+      val sets = DerivedTable(s, d, Artifacts.minhash) {
         val base = shingled(Tables.documents(s, d)).localCheckpoint()
         val hashed = base
           .select(col("doc_id"), explode(col("tri")).as("sh"))
@@ -792,7 +792,7 @@ object Dedup {
     QueryDef.noOracle("x03_simhash") { (s, d) =>
       // Fingerprint table persisted content-keyed ([[DerivedTable]]) —
       // reused by the band explode + both pair-join sides, and across runs.
-      val fp = DerivedTable(s, d, "documents", "simhash") {
+      val fp = DerivedTable(s, d, Artifacts.simhash) {
         val docToks = Tables.documents(s, d)
           .select(col("doc_id"),
             explode(array_distinct(Text.tokens(col("text")))).as("tok"))
@@ -1257,7 +1257,7 @@ object Dedup {
       // persisted content-keyed: this IS the prefix-index write every
       // PPJoin implementation does at ingest (was localCheckpoint — warm
       // runs re-ran the df aggregate + per-doc ranking window each time)
-      val prefix = DerivedTable(s, d, "documents", "ppjprefix") {
+      val prefix = DerivedTable(s, d, Artifacts.ppjprefix) {
         grams.join(df, "g")
           .withColumn("rn", row_number().over(
             Window.partitionBy(col("doc_id")).orderBy(col("df"), col("g"))))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.functions.Num
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 import graft.functions.Geo
 
 /** Geospatial operator queries exercising [[graft.functions.Geo]] —
@@ -184,7 +184,7 @@ object GeoQueries {
     * predicates can prune row groups by min/max stats. Exposed for
     * GeoPushdownSpec's plan pin. */
   private[graft] def pointsTable(s: org.apache.spark.sql.SparkSession, d: String) =
-    DerivedTable(s, d, "events", "geopoints") {
+    DerivedTable(s, d, Artifacts.geopoints) {
       Tables.events(s, d).select(col("event_id"),
         ((col("user_id") % 180) - 90).cast("double").as("lat"),
         ((col("value") % 360) - 180).as("lon"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Num
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 
 /** Materialized-view / denormalized-fact physical design — the reference's
   * `accident_geo_view` + `accident_facts` optimization (etl.py:251-288,
@@ -24,9 +24,7 @@ object Matview {
     * the events parquet's size+mtime, so regenerating the testdata at the
     * same path yields a new cache entry instead of stale serving. */
   def factPath(s: SparkSession, dir: String): String = {
-    val srcKey = graft.ContentKey.key(
-      java.nio.file.Paths.get(dir, "events.parquet"))
-    val out = graft.Warehouse.path(s"graft_fact_v2_$srcKey")
+    val out = Artifacts.fact.path(dir)
     graft.Publish.once(out) { tmp =>
       FactBuild.build(s, dir)
         .write.mode("overwrite").partitionBy("day").parquet(tmp)
@@ -102,7 +100,7 @@ object Matview {
     // entirely, and the matview is incrementally maintainable (append a
     // day's partials, never recompute history).
     QueryDef("q52_agg_matview", servingOracle) { (s, d) =>
-      combine(s, DerivedTable(s, d, "events", "aggmv") {
+      combine(s, DerivedTable(s, d, Artifacts.aggmv) {
         // dims-sized (days×buckets) — one file, no small-file tax
         partials(fact(s, d)).coalesce(1)
       })
@@ -121,7 +119,7 @@ object Matview {
     // st02-style upsert first, and its (day, bucket) partials are the
     // delta — the same bounded-work shape.
     QueryDef("q55_matview_refresh", servingOracle) { (s, d) =>
-      val stale = DerivedTable(s, d, "events", "aggmv_stale") {
+      val stale = DerivedTable(s, d, Artifacts.aggmvStale) {
         partials(fact(s, d)
           .filter(col("day") <= lit("2024-01-25").cast("date")))
           .coalesce(1)

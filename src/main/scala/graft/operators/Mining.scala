@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Num, Text}
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 
 /** Corpus-mining extensions for the training-data pipeline: a bigram
   * language model (the n>1 upgrade of x23's unigram scorer), blocked
@@ -85,12 +85,12 @@ object Mining {
       // language profiles: train once at ingest, broadcast to score —
       // before this every run re-aggregated the train-split bigram and
       // unigram counts (two corpus-sized shuffles ahead of the broadcast)
-      val c1 = DerivedTable(s, d, "documents", "bigramlm_uni") {
+      val c1 = DerivedTable(s, d, Artifacts.bigramlmUni) {
         bg.filter(col("split") === "train")
           .groupBy(col("w1")).agg(count(lit(1)).as("uc"))
       }
       val v = c1.agg(count(lit(1)).as("v"))
-      val model = DerivedTable(s, d, "documents", "bigramlm_top") {
+      val model = DerivedTable(s, d, Artifacts.bigramlmTop) {
         bg.filter(col("split") === "train")
           .groupBy(col("bigram")).agg(count(lit(1)).as("c"))
           .orderBy(col("c").desc, col("bigram")).limit(2000)
@@ -3060,13 +3060,13 @@ object Mining {
     * per query. st30 is the path that retrains — from its folded
     * word-count state, which is the point. */
   private[graft] def bpeMergesArtifact(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    DerivedTable(s, d, "documents", "bpemerges", builderVersion = 2) {
+    DerivedTable(s, d, Artifacts.bpemerges) {
       val (_, reports) = bpeTrain(bpeSym0(Tables.documents(s, d)), BpeBudget)
       reports.reduce(_ unionByName _)
     }
 
   private[graft] def bpeSymsArtifact(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    DerivedTable(s, d, "documents", "bpesyms", builderVersion = 2) {
+    DerivedTable(s, d, Artifacts.bpesyms) {
       bpeTrain(bpeSym0(Tables.documents(s, d)), BpeBudget)._1
     }
 

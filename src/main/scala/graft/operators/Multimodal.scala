@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Num
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata, decoded per-partition.
@@ -1806,7 +1806,7 @@ object Multimodal {
           explode(array_distinct(slice(
             filter(Text.tokens(col("text")), w => length(w) > 0),
             1, 8))).as("tok"))
-      val cfp = DerivedTable(s, d, "documents", "capsimhash") {
+      val cfp = DerivedTable(s, d, Artifacts.capsimhash) {
           Dedup.simhashBitsOf(ctok)
         }
         .groupBy(col("doc_id"))

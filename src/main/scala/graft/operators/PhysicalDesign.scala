@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Num
-import graft.{ContentKey, QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 
 /** Physical-design operators beyond the matview/fact table (SURVEY.md §4):
   * partitioned layout with partition pruning, and bucketed layout with a
@@ -17,8 +17,6 @@ import graft.{ContentKey, QueryDef, Tables}
   * (same invalidation contract as [[Matview.factPath]]).
   */
 object PhysicalDesign {
-
-  private def tmp(name: String): String = graft.Warehouse.path(name)
 
   /** 8+8-bit Morton (Z-order) interleave — the multi-dimensional
     * clustering key Delta/Iceberg expose as Z-ORDER. Pure bit arithmetic
@@ -41,8 +39,7 @@ object PhysicalDesign {
     * dimensions (a day-sorted layout bounds only the day: any value-range
     * predicate touches every file). Built once per source content. */
   def zorderEventsPath(s: SparkSession, dir: String): String = {
-    val key = ContentKey.key(java.nio.file.Paths.get(dir, "events.parquet"))
-    val out = tmp(s"graft_events_zorder_v1_$key")
+    val out = Artifacts.eventsZorder.path(dir)
     graft.Publish.once(out) { t =>
       zKeyed(Tables.events(s, dir))
         .repartitionByRange(8, col("z"))
@@ -65,8 +62,7 @@ object PhysicalDesign {
 
   /** Day-partitioned copy of events; built once per source content. */
   def partitionedEventsPath(s: SparkSession, dir: String): String = {
-    val key = ContentKey.key(java.nio.file.Paths.get(dir, "events.parquet"))
-    val out = tmp(s"graft_events_byday_v2_$key")
+    val out = Artifacts.eventsByday.path(dir)
     graft.Publish.once(out) { t =>
       Tables.events(s, dir)
         .withColumn("day", to_date(col("ts")))
@@ -86,19 +82,18 @@ object PhysicalDesign {
         Num.roundOut(sum(col("value")), 4).as("sum_value"))
       .orderBy(col("event_type"))
 
-  /** Bucketed-table names/paths are content-keyed so a session that ever
-    * serves two sf dirs (specs use sf0.001 while Verify/Bench use their
-    * own) never crosses data. */
   /** Build one bucketed table's FILES atomically (bucketBy requires
     * saveAsTable, so the write goes through a per-run scaffold table name
     * pointing into the publish temp dir — dropped immediately, external so
     * the files stay), then register the catalog entry over the published
     * location via DDL. Two JVMs racing on one content key each publish-or-
     * lose on the files and register in their own catalogs; a fresh JVM
-    * over a warm warehouse skips the build entirely and just registers. */
-  private def bucketedBuild(s: SparkSession, table: String, ddlCols: String)
-      (df: => DataFrame): Unit = {
-    val out = tmp(table)
+    * over a warm warehouse skips the build entirely and just registers.
+    * Table names and paths are content-keyed so a session that ever serves
+    * two sf dirs (specs use sf0.001 while Verify/Bench use their own)
+    * never crosses data. */
+  private def bucketedBuild(s: SparkSession, table: String, out: String,
+      ddlCols: String)(df: => DataFrame): Unit = {
     graft.Publish.once(out) { t =>
       // per-CALL nonce (the publish temp dir's UUID fragment), not the
       // per-JVM runToken: two threads first-touching the bucketed tier in
@@ -115,20 +110,23 @@ object PhysicalDesign {
   }
 
   private def bucketedTables(s: SparkSession, dir: String): (String, String) = {
-    val key = ContentKey.key(java.nio.file.Paths.get(dir, "events.parquet"))
-    val (t1, t2) = (s"g_user_stats_v2_$key", s"g_user_purch_v2_$key")
+    // both families are keyed on events.parquet: one key names the pair
+    val (stats, purch) = (Artifacts.bucketedStats, Artifacts.bucketedPurch)
+    val key = stats.key(dir)
+    val (t1, t2) = (stats.dirName(key), purch.dirName(key))
     // check BOTH tables: a failure between the two builds (swallowed by
     // Bench's warmup) must not leave a half-built pair latched for the
     // rest of the session
     if (!s.catalog.tableExists(t1) || !s.catalog.tableExists(t2)) {
-      bucketedBuild(s, t1,
+      bucketedBuild(s, t1, stats.pathOf(key),
         "user_id BIGINT, n_events BIGINT, sum_value DOUBLE") {
         Tables.events(s, dir)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_events"),
             Num.roundOut(sum(col("value")), 4).as("sum_value"))
       }
-      bucketedBuild(s, t2, "user_id BIGINT, n_purchases BIGINT") {
+      bucketedBuild(s, t2, purch.pathOf(key),
+        "user_id BIGINT, n_purchases BIGINT") {
         Tables.events(s, dir)
           .filter(col("event_type") === "purchase")
           .groupBy(col("user_id"))
@@ -159,8 +157,7 @@ object PhysicalDesign {
   /** A deliberately fragmented copy of events — 64 tiny files, the layout
     * a micro-batch ingest leaves behind. Built once per source content. */
   def fragmentedEventsPath(s: SparkSession, dir: String): String = {
-    val key = ContentKey.key(java.nio.file.Paths.get(dir, "events.parquet"))
-    val out = tmp(s"graft_events_frag_v1_$key")
+    val out = Artifacts.eventsFrag.path(dir)
     graft.Publish.once(out) { t =>
       Tables.events(s, dir).repartition(64)
         .write.mode("overwrite").parquet(t)
@@ -190,8 +187,7 @@ object PhysicalDesign {
     * filesystem, but the sizing math is identical. */
   def compactedEventsPath(s: SparkSession, dir: String): String = {
     val frag = fragmentedEventsPath(s, dir)
-    val key = ContentKey.key(java.nio.file.Paths.get(dir, "events.parquet"))
-    val out = tmp(s"graft_events_compact_v1_$key")
+    val out = Artifacts.eventsCompact.path(dir)
     graft.Publish.once(out) { t =>
       val n = math.max(1L,
         (dirBytes(frag) + TargetFileBytes - 1) / TargetFileBytes).toInt
@@ -587,8 +583,7 @@ object PhysicalDesign {
     * and `v2.manifest` list the directories each version reads. Returns
     * the two manifest paths. Append-only: v2 re-lists base/ unchanged. */
   private[graft] def timeTravelVersions(s: SparkSession, d: String): (String, String) = {
-    val key = ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))
-    val root = tmp(s"graft_tt_v1_$key")
+    val root = Artifacts.timeTravel.path(d)
     // Manifests list data dirs RELATIVE to themselves (like every real
     // table-format manifest) — required for the atomic temp-dir build,
     // whose final location differs from where the files were written.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Num, Text}
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 
 /** Content-extraction and TRAINED quality classification — the two
   * curation stages between raw ingest and the x08/x93 filter battery:
@@ -352,7 +352,7 @@ object Quality {
     * CTEs and plucks the matching epoch's weights, so a drifted
     * stopping rule hash-fails. */
   private[graft] def qweightsArtifact(s: SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "documents", "qweights", builderVersion = 2) {
+    DerivedTable(s, d, Artifacts.qweights) {
       val docs = Tables.documents(s, d)
       modelTable(
         trainFromCells(featureCells(docs), labelTable(docs),
@@ -476,7 +476,7 @@ object Quality {
     * the no-leakage model a held-out evaluation requires. */
   private[graft] def qweightsTrainArtifact(s: SparkSession,
       d: String): DataFrame =
-    DerivedTable(s, d, "documents", "qweightstr") {
+    DerivedTable(s, d, Artifacts.qweightstr) {
       val tr = Tables.documents(s, d)
         .join(TextAnalysis.fingerprintTable(s, d), "doc_id")
         .filter(col("fp") % 100 < 80)
@@ -588,13 +588,13 @@ object Quality {
   /** The validation curve as a content-keyed artifact (the stopping rule
     * runs once per corpus content; serving is a 24-row scan). */
   private[graft] def qvalcurveArtifact(s: SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "documents", "qvalcurve") { validatedRun(s, d)._1 }
+    DerivedTable(s, d, Artifacts.qvalcurve) { validatedRun(s, d)._1 }
 
   /** The CHOSEN round's weights as their own artifact — the model an
     * early-stopped filter deploy ships. */
   private[graft] def qweightsvalArtifact(s: SparkSession,
       d: String): DataFrame =
-    DerivedTable(s, d, "documents", "qweightsval") {
+    DerivedTable(s, d, Artifacts.qweightsval) {
       validatedRun(s, d)._2.select(col("b"), col("w").as("w_micro"))
     }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Num
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors):
   * brute-force cosine top-k as the exact baseline, and a random-hyperplane
@@ -162,18 +162,13 @@ object Similarity {
     }
   }
 
-  /** The ANN index is BUILT ONCE per corpus content ([[DerivedTable]]) and
-    * probed per query — at 100 TB the build is the ingest job, and queries
-    * never re-scan the corpus. */
-  private def indexed(s: SparkSession, dir: String, tag: String,
-      partCols: Seq[String])(build: => DataFrame): DataFrame =
-    DerivedTable(s, dir, "embeddings", tag, partCols)(build)
-
   /** The persisted 4-table LSH index (vec_id, v, nrm, tbl, bucket) —
     * shared by x06's multi-table probe and x113's multiprobe (same
-    * DerivedTable tag ⇒ one on-disk artifact). */
+    * family ⇒ one on-disk artifact). BUILT ONCE per corpus content and
+    * probed per query — at 100 TB the build is the ingest job, and
+    * queries never re-scan the corpus. */
   private def lshIndex(s: SparkSession, d: String): DataFrame =
-    indexed(s, d, "lsh", Seq.empty) {
+    DerivedTable(s, d, Artifacts.lsh) {
       val n0 = bucketed(withNorm(Tables.embeddings(s, d)))
       (0 until 4).map { t =>
         n0.select(col("vec_id"), col("v"), col("nrm"),
@@ -217,7 +212,7 @@ object Similarity {
     * smaller table is the serving artifact a brute-force tier scans
     * instead of the raw 64-dim vectors; x73 reads it. */
   private def jlProjTable(s: SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "embeddings", "jlproj") {
+    DerivedTable(s, d, Artifacts.jlproj) {
       Tables.table(s, d, "embeddings").select(col("vec_id") +: jlProjCols: _*)
     }
 
@@ -415,8 +410,8 @@ object Similarity {
       // rk≤4 assignment artifact, inverted-file layout (x14's builder at
       // a deeper probe budget — a separate table so x14's rk≤2 index
       // stays byte-stable)
-      val assigned4 = DerivedTable(s, d, "embeddings", "ivf4",
-          Seq("cent_id"), builderVersion = 2) {
+      val assigned4 = DerivedTable(s, d, Artifacts.ivf4,
+          Seq("cent_id")) {
         val n = withNorm(Tables.embeddings(s, d))
         val cents = n.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("cent_id"), col("v").as("cv"),
@@ -2434,7 +2429,7 @@ object Similarity {
     * cluster values prunes to the probed lists' directories (x14's
     * partition-pruning layout). */
   private[graft] def kmeansListsTable(s: SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "embeddings", "kmlists", Seq("cluster")) {
+    DerivedTable(s, d, Artifacts.kmlists, Seq("cluster")) {
       kmeansAssign(s, d)
     }
 
@@ -2443,7 +2438,7 @@ object Similarity {
     * persisted content-keyed; x33/x34 assignment and x60's coarse
     * quantizer all read this one artifact. */
   def kmeansCentroids(s: SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "embeddings", "kmeans") {
+    DerivedTable(s, d, Artifacts.kmeans) {
       val v = kmeansVectors(s, d)
       val init = v.filter(col("vec_id") < 4)
         .select(col("vec_id").cast("int").as("cluster"), col("v").as("c"))
@@ -2583,7 +2578,7 @@ object Similarity {
     * model artifact. */
   def pqCodebook(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    DerivedTable(s, d, "embeddings", "pqbook") {
+    DerivedTable(s, d, Artifacts.pqbook) {
       val sv = pqSubvectors(s, d).localCheckpoint() // 3 assigns + 2 updates
       val init = sv.filter(col("vec_id") < 2)
         .select((col("vec_id") * 4 + col("sub")).cast("int").as("cluster"),
@@ -2619,7 +2614,7 @@ object Similarity {
     * builderVersion 2: assignment ranks on ROUNDED sims (oracle parity).
     * Shared by x14's probe and x101's append-maintenance proof. */
   private[graft] def ivfAssignedTable(s: SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "embeddings", "ivf", Seq("cent_id"), builderVersion = 2) {
+    DerivedTable(s, d, Artifacts.ivf, Seq("cent_id")) {
       val n = withNorm(Tables.embeddings(s, d))
       val cents = n.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
@@ -2664,7 +2659,7 @@ object Similarity {
     * the persisted PQ index (what a 100 TB corpus stores and scans). */
   def pqCodes(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    DerivedTable(s, d, "embeddings", "pqcodes") {
+    DerivedTable(s, d, Artifacts.pqcodes) {
       pqSubvectors(s, d).crossJoin(broadcast(pqCodebook(s, d)))
         .withColumn("dist", pqSqDist(col("v"), col("c")))
         .withColumn("rn", row_number().over(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Geo
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 
 /** Source-shape operators: the reference's REST/GeoJSON ingestion path
   * (SURVEY.md §2.1 S2/S3 + F1: FeatureCollection unwrap → explode features
@@ -113,8 +113,7 @@ object Sources {
       """SELECT event_type, count(*) AS n,
         |       round(1e-9 + sum(value), 4) AS sum_value
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
-      val key = graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))
-      val out = graft.Warehouse.path(s"graft_csv_v2_$key")
+      val out = Artifacts.csvSink.path(d)
       graft.Publish.once(out) { t =>
         Tables.events(s, d)
           .select(col("event_id"), col("event_type"), col("user_id"), col("value"))
@@ -133,8 +132,7 @@ object Sources {
     QueryDef("w04_jsonl_roundtrip",
       """SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS total_chars
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin) { (s, d) =>
-      val key = graft.ContentKey.key(java.nio.file.Paths.get(d, "documents.parquet"))
-      val out = graft.Warehouse.path(s"graft_jsonl_v2_$key")
+      val out = Artifacts.jsonlSink.path(d)
       graft.Publish.once(out) { t =>
         Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -157,8 +155,7 @@ object Sources {
       """SELECT source, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS total_chars,
         |       round(1e-9 + sum(n_chars) * 1.0 / count(*), 4) AS avg_chars
         |FROM documents GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
-      val key = graft.ContentKey.key(java.nio.file.Paths.get(d, "documents.parquet"))
-      val out = graft.Warehouse.path(s"graft_orc_v1_$key")
+      val out = Artifacts.orcSink.path(d)
       graft.Publish.once(out) { t =>
         Tables.documents(s, d)
           .select(col("doc_id"), col("source"), col("n_chars"))
@@ -189,8 +186,7 @@ object Sources {
         |FROM events
         |WHERE CAST(ts AS DATE) <> DATE '2024-01-05' OR event_type = 'click'
         |GROUP BY CAST(ts AS DATE) ORDER BY day""".stripMargin) { (s, d) =>
-      val key = graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))
-      val out = graft.Warehouse.path(s"graft_dynover_v1_$key")
+      val out = Artifacts.dynamicOverwrite.path(d)
       graft.Publish.once(out, marker = "_GRAFT_DONE", stampMarker = true) { t =>
         val ev = Tables.events(s, d)
           .select(to_date(col("ts")).as("day"), col("event_id"),
@@ -226,8 +222,7 @@ object Sources {
         |         AS src,
         |       count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS total_chars
         |FROM documents GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      val key = graft.ContentKey.key(java.nio.file.Paths.get(d, "documents.parquet"))
-      val out = graft.Warehouse.path(s"graft_schemaevo_v1_$key")
+      val out = Artifacts.schemaEvolution.path(d)
       graft.Publish.once(out, marker = "_GRAFT_DONE", stampMarker = true) { t =>
         val docs = Tables.documents(s, d)
         docs.filter(col("doc_id") < 250)
@@ -259,8 +254,7 @@ object Sources {
         |FROM events
         |WHERE user_id % 10 <> 3
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
-      val key = graft.ContentKey.key(java.nio.file.Paths.get(d, "events.parquet"))
-      val out = graft.Warehouse.path(s"graft_gdpr_v1_$key")
+      val out = Artifacts.gdprRewrite.path(d)
       graft.Publish.once(out, marker = "_GRAFT_DONE", stampMarker = true) { t =>
         val ev = Tables.events(s, d)
         // the deletion-request set, as an explicit key relation (not a

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Num
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 import graft.functions.Text
 
 /** Text-analysis suite for the training-data pipeline: language ID, quality
@@ -52,7 +52,7 @@ object TextAnalysis {
     * content fingerprint once at ingest; recomputing it per query was
     * paying that cost seven times per pass over the corpus. */
   private[operators] def fingerprintTable(s: SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "documents", "fptable") {
+    DerivedTable(s, d, Artifacts.fptable) {
       Tables.documents(s, d)
         .select(col("doc_id"), Text.fingerprint(col("text")).as("fp"))
     }
@@ -350,7 +350,7 @@ object TextAnalysis {
   def langProfile(s: SparkSession, d: String): DataFrame = {
     val w = Tables.documents(s, d).select(col("lang"),
       explode(Text.tokens(col("text"))).as("word"))
-    DerivedTable(s, d, "documents", "langprof") {
+    DerivedTable(s, d, Artifacts.langprof) {
       val cnt = w.groupBy(col("lang"), col("word")).agg(count(lit(1)).as("c"))
       val tot = cnt.groupBy(col("lang")).agg(sum(col("c")).as("t"))
       cnt.join(tot, "lang")
@@ -3387,7 +3387,7 @@ object TextAnalysis {
     * At 100 TB this is the eval-protection side table every training run
     * keeps next to the corpus. */
   private[operators] def trainGramTable(s: SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "documents", "traingrams") {
+    DerivedTable(s, d, Artifacts.traingrams) {
       Dedup.shingleTable(s, d)
         .join(fingerprintTable(s, d), "doc_id")
         .filter(col("fp") % 100 < 80)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.functions.Text
 
 /** The TOKEN-POSITION table `tokens(doc_id, i, word)` persisted
@@ -27,7 +27,7 @@ import graft.functions.Text
 object Tokens {
 
   private[graft] def table(s: SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "documents", "tokens") {
+    DerivedTable(s, d, Artifacts.tokens) {
       Tables.documents(s, d).select(col("doc_id"),
         posexplode(Text.tokens(col("text"))).as(Seq("i", "word")))
     }
@@ -779,7 +779,7 @@ object Tokens {
     * serving a stage-1-only suffix table (DerivedTable's per-builder
     * invalidation rule). */
   private[graft] def wfslcpArtifact(s: SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "documents", "wfslcp", builderVersion = 2) {
+    DerivedTable(s, d, Artifacts.wfslcp) {
       suffixLcpFrom(table(s, d).join(survivors2(s, d), "doc_id"))
     }
 
@@ -1732,7 +1732,7 @@ object Tokens {
     * Cost model in SCALING.md r14. */
   private[graft] def suffixLcpArtifact(s: SparkSession,
       d: String): DataFrame =
-    DerivedTable(s, d, "documents", "slcp", builderVersion = 2) {
+    DerivedTable(s, d, Artifacts.slcp) {
       suffixLcpFrom(table(s, d))
     }
 
@@ -1763,7 +1763,7 @@ object Tokens {
     * NEW token adjacencies (previously-distant tokens become neighbors),
     * so residual repeats cannot be derived from the original slcp. */
   private[graft] def rwslcpArtifact(s: SparkSession, d: String): DataFrame =
-    DerivedTable(s, d, "documents", "rwslcp") {
+    DerivedTable(s, d, Artifacts.rwslcp) {
       suffixLcpFrom(rewrittenTokens(suffixLcpArtifact(s, d), table(s, d)))
     }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.Num
-import graft.{QueryDef, Tables}
+import graft.{Artifacts, QueryDef, Tables}
 
 /** Structured Streaming surface. The reference itself has NO streaming
   * (SURVEY.md §2.9 — batch pull + incremental upsert), so this module is the
@@ -178,38 +178,30 @@ object Streams {
 
   /** Stage the single-file events table as a stream-source directory
     * (build-once per content key). */
-  private[graft] def stageEvents(dir: String): String = {
-    val src = java.nio.file.Paths.get(dir, "events.parquet")
-    stageLinks(java.nio.file.Paths.get(graft.Warehouse.path(
-      s"graft_stream_v2_${graft.ContentKey.key(src)}")),
-      src, Seq("events.parquet"))
-  }
+  private[graft] def stageEvents(dir: String): String =
+    stageLinks(java.nio.file.Paths.get(Artifacts.stageEvents.path(dir)),
+      java.nio.file.Paths.get(dir, "events.parquet"), Seq("events.parquet"))
 
   /** Stage events TWICE (two hard links → two micro-batches with
     * maxFilesPerTrigger=1) so every event arrives as a duplicate — the
     * input st03's streaming dedup must suppress. */
-  private[graft] def stageEventsDuplicated(dir: String): String = {
-    val src = java.nio.file.Paths.get(dir, "events.parquet")
-    stageLinks(java.nio.file.Paths.get(graft.Warehouse.path(
-      s"graft_stream_dup_v1_${graft.ContentKey.key(src)}")),
-      src, Seq("events_a.parquet", "events_b.parquet"))
-  }
+  private[graft] def stageEventsDuplicated(dir: String): String =
+    stageLinks(java.nio.file.Paths.get(Artifacts.stageEventsDup.path(dir)),
+      java.nio.file.Paths.get(dir, "events.parquet"),
+      Seq("events_a.parquet", "events_b.parquet"))
 
-  /** Stage `table` SPLIT in two disjoint halves by the parity of its
-    * integer `key` (two files → two micro-batches under [[replay]]), so
-    * incremental folds actually merge across batches. Published at
-    * `graft_stream_<prefix>_v1_<content key of table.parquet>`. Written
-    * through Spark, so a staged events `ts` keeps whatever encoding the
-    * source read produced (long nanos or NTZ micros) — consumers
-    * normalize via [[graft.Tables.normalizeTs]]. */
-  private[graft] def stageSplit(s: SparkSession, dir: String, table: String,
-      key: String, prefix: String): String = {
-    val src = java.nio.file.Paths.get(dir, s"$table.parquet")
-    stageSlices(java.nio.file.Paths.get(graft.Warehouse.path(
-      s"graft_stream_${prefix}_v1_${graft.ContentKey.key(src)}")),
-      Seq(0, 1).map(par => graft.Tables.table(s, dir, table)
+  /** Stage the `family`'s source table SPLIT in two disjoint halves by
+    * the parity of its integer `key` (two files → two micro-batches under
+    * [[replay]]), so incremental folds actually merge across batches.
+    * Published at the family's path for `dir`. Written through Spark, so a
+    * staged events `ts` keeps whatever encoding the source read produced
+    * (long nanos or NTZ micros) — consumers normalize via
+    * [[graft.Tables.normalizeTs]]. */
+  private[graft] def stageSplit(s: SparkSession, dir: String,
+      family: Artifacts.Family, key: String): String =
+    stageSlices(java.nio.file.Paths.get(family.path(dir)),
+      Seq(0, 1).map(par => graft.Tables.table(s, dir, family.srcTable)
         .filter(col(key) % 2 === par)))()
-  }
 
   /** Stage EVENTS as three TIME-ORDERED slices (date terciles by pure
     * integer arithmetic on datediff — no window) with strictly
@@ -219,15 +211,13 @@ object Streams {
     * arrival — which is exactly how a production event log lands.
     * Content-keyed like [[stageSplit]]. */
   private[graft] def stageEventsTimeSplit(s: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(dir, "events.parquet")
     val ev = Tables.events(s, dir) // ts normalized to micros on disk
     val bounds = ev.agg(min(to_date(col("ts"))).as("d0"),
       max(to_date(col("ts"))).as("d1"))
     val sliced = ev.crossJoin(broadcast(bounds))
       .withColumn("slice", expr(
         "least(2, (datediff(to_date(ts), d0) * 3) div (datediff(d1, d0) + 1))"))
-    stageSlices(java.nio.file.Paths.get(graft.Warehouse.path(
-      s"graft_stream_tsplit_v1_${graft.ContentKey.key(src)}")),
+    stageSlices(java.nio.file.Paths.get(Artifacts.stageEventsTsplit.path(dir)),
       Seq(0, 1, 2).map(par => sliced.filter(col("slice") === par)
         .drop("slice", "d0", "d1")),
       mtimeBase = Some(1600000000000L)) { root =>
@@ -517,7 +507,7 @@ object Streams {
         |       count(*) AS n, round(1e-9 + sum(value), 4) AS sum_value
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "events", "event_id", "split")
+        val stage = stageSplit(ss, d, Artifacts.stageEventsSplit, "event_id")
         val Seq(root) = fresh(d, "events", "staggmv_v1")
         // deliberately LOW threshold (1 — AQE coalesces the tiny
         // fixture deltas to one file per append): this family
@@ -696,7 +686,7 @@ object Streams {
         |                             THEN value END), 4) AS p90_sample
         |FROM sq GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "events", "event_id", "split")
+        val stage = stageSplit(ss, d, Artifacts.stageEventsSplit, "event_id")
         val Seq(root) = fresh(d, "events", "stquant_v1")
         def bottomK(df: DataFrame): DataFrame = df
           .withColumn("rn", row_number().over(
@@ -763,7 +753,7 @@ object Streams {
     QueryDef("st10_stream_neardup",
       graft.operators.Dedup.x39OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(root) = fresh(d, "documents", "stneardup_v1")
         val sigDir = s"$root/sigs"
         val bandDir = s"$root/bands"
@@ -848,7 +838,7 @@ object Streams {
     QueryDef("st11_stream_heavyhitter",
       graft.operators.Corpus.x42OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(mgDir) = fresh(d, "documents", "stheavy_v1")
         // each batch's exact counts (a lossless MG summary) append; the
         // MG reduction runs over the summed log — mergeability per
@@ -899,7 +889,7 @@ object Streams {
     QueryDef("st12_stream_hll",
       graft.operators.TextAnalysis.x62OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "events", "event_id", "split")
+        val stage = stageSplit(ss, d, Artifacts.stageEventsSplit, "event_id")
         val Seq(regDir) = fresh(d, "events", "sthll_v1")
         val regs = new StateFold.Log(regDir,
           _.groupBy(col("reg")).agg(max(col("rho")).as("rho")))
@@ -934,7 +924,7 @@ object Streams {
     QueryDef("st13_stream_retention",
       graft.operators.Analytics.q78OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "events", "event_id", "split")
+        val stage = stageSplit(ss, d, Artifacts.stageEventsSplit, "event_id")
         val Seq(firstDir, actDir) =
           fresh(d, "events", "stret_first_v1", "stret_act_v1")
         val first = new StateFold.Log(firstDir, _.groupBy(col("user_id"))
@@ -989,7 +979,7 @@ object Streams {
     QueryDef("st14_stream_sample",
       graft.operators.TextAnalysis.x97OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(sampleDir) = fresh(d, "documents", "stsample_v1")
         val sample = new StateFold.Log(sampleDir,
           _.orderBy(col("pri").desc, col("doc_id")).limit(20))
@@ -1023,7 +1013,7 @@ object Streams {
     QueryDef("st15_stream_dup_stats",
       graft.operators.Dedup.x96OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(stateDir) = fresh(d, "documents", "stdup_v1")
         val clusters = new StateFold.Log(stateDir, _.groupBy(col("th"))
           .agg(sum(col("csize")).as("csize"), sum(col("mass")).as("mass")))
@@ -1069,7 +1059,7 @@ object Streams {
     QueryDef("st16_stream_growth",
       graft.operators.Analytics.x109OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "events", "event_id", "split")
+        val stage = stageSplit(ss, d, Artifacts.stageEventsSplit, "event_id")
         val Seq(actDir) = fresh(d, "events", "stgrow_act_v1")
         val act = new StateFold.Log(actDir, _.distinct())
         drain(replay(ss, stage)) { batch =>
@@ -1098,7 +1088,7 @@ object Streams {
     QueryDef("st17_stream_ab",
       graft.operators.Analytics.x111OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "events", "event_id", "split")
+        val stage = stageSplit(ss, d, Artifacts.stageEventsSplit, "event_id")
         val Seq(momDir) = fresh(d, "events", "stab_mom_v1")
         val moments = new StateFold.Log(momDir,
           _.groupBy(col("event_type")).agg(
@@ -1133,7 +1123,7 @@ object Streams {
     QueryDef("st18_stream_topk",
       graft.operators.Analytics.x125OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "events", "event_id", "split")
+        val stage = stageSplit(ss, d, Artifacts.stageEventsSplit, "event_id")
         val Seq(ledDir) = fresh(d, "events", "sttopk_led_v1")
         val ledger = new StateFold.Log(ledDir,
           _.groupBy(col("event_type"), col("user_id")).agg(
@@ -1165,7 +1155,7 @@ object Streams {
     QueryDef("st19_stream_changepoint",
       graft.operators.Analytics.x119OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "events", "event_id", "split")
+        val stage = stageSplit(ss, d, Artifacts.stageEventsSplit, "event_id")
         val Seq(dayDir) = fresh(d, "events", "stchg_day_v1")
         val days = new StateFold.Log(dayDir,
           _.groupBy(col("day")).agg(sum(col("cnt")).as("cnt")))
@@ -1195,7 +1185,7 @@ object Streams {
     QueryDef("st20_stream_srm",
       graft.operators.Analytics.x127OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "events", "event_id", "split")
+        val stage = stageSplit(ss, d, Artifacts.stageEventsSplit, "event_id")
         val Seq(actDir) = fresh(d, "events", "stsrm_act_v1")
         val act = new StateFold.Log(actDir, _.distinct())
         drain(replay(ss, stage)) { batch =>
@@ -1227,7 +1217,7 @@ object Streams {
     QueryDef("st21_stream_ivf",
       graft.operators.Similarity.x101OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "embeddings", "vec_id", "vecsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageVecSplit, "vec_id")
         val Seq(ivfDir) = fresh(d, "embeddings", "stivf_v1")
         // assignment is per-vector deterministic, so the log's distinct
         // is only replay armor
@@ -1378,7 +1368,7 @@ object Streams {
     QueryDef("st24_stream_drift",
       graft.operators.Analytics.x156OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(stDir) = fresh(d, "documents", "stdrift_v1")
         val lengths = new StateFold.Log(stDir,
           _.groupBy(col("source"), col("v")).agg(sum(col("c")).as("c")))
@@ -1407,7 +1397,7 @@ object Streams {
     QueryDef("st25_stream_calibration",
       graft.operators.TextAnalysis.x174OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(stDir) = fresh(d, "documents", "stcalib_v1")
         val bins = new StateFold.Log(stDir, _.groupBy(col("bin"))
           .agg(sum(col("n")).as("n"), sum(col("p")).as("p")))
@@ -1432,7 +1422,7 @@ object Streams {
     QueryDef("st26_stream_trend",
       graft.operators.Classic.x175OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "orders", "o_orderkey", "ordsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageOrdersSplit, "o_orderkey")
         val Seq(stDir) = fresh(d, "orders", "sttrend_v1")
         val weeks = new StateFold.Log(stDir,
           _.groupBy(col("w")).agg(sum(col("cents")).as("cents")))
@@ -1457,7 +1447,7 @@ object Streams {
     QueryDef("st27_stream_packing",
       graft.operators.Mining.x183OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(stDir) = fresh(d, "documents", "stpack_v1")
         val buckets = new StateFold.Log(stDir,
           _.groupBy(col("l")).agg(sum(col("n_docs")).as("n_docs")))
@@ -1483,7 +1473,7 @@ object Streams {
     QueryDef("st28_stream_golden_record",
       graft.operators.Dedup.x184OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "part", "p_partkey", "partsplit")
+        val stage = stageSplit(ss, d, Artifacts.stagePartSplit, "p_partkey")
         val Seq(stDir) = fresh(d, "part", "stgolden_v1")
         val names = new StateFold.Log(s"$stDir/names", _.groupBy(col("name"))
           .agg(sum(col("n_parts")).as("n_parts"),
@@ -1637,7 +1627,7 @@ object Streams {
     QueryDef("st30_stream_bpe",
       graft.operators.Mining.x196OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(stDir) = fresh(d, "documents", "stbpe_v1")
         val words = new StateFold.Log(stDir,
           _.groupBy(col("word")).agg(sum(col("wc")).as("wc")))
@@ -1672,7 +1662,7 @@ object Streams {
     QueryDef("st31_stream_curation",
       graft.operators.Mining.x199OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(stDir) = fresh(d, "documents", "stcur_v1")
         val meta = new StateFold.Log(stDir, identity)
         drain(replay(ss, stage)) { batch =>
@@ -1703,7 +1693,7 @@ object Streams {
     QueryDef("st32_stream_contamination",
       graft.operators.Mining.x200OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(trDir, evDir) =
           fresh(d, "documents", "stcontam_tr_v1", "stcontam_ev_v1")
         val train = new StateFold.Log(trDir, _.distinct())
@@ -1741,7 +1731,7 @@ object Streams {
     QueryDef("st33_stream_classifier",
       graft.operators.Quality.x204OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(ceDir, lbDir, bsDir) = fresh(d, "documents",
           "stqcls_ce_v1", "stqcls_lb_v1", "stqcls_bs_v1")
         val cells = new StateFold.Log(ceDir, identity)
@@ -1805,7 +1795,7 @@ object Streams {
     QueryDef("st34_stream_hardness_mix",
       graft.operators.Quality.x208OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(ceDir, lbDir, mmDir) = fresh(d, "documents",
           "sthm_ce_v1", "sthm_lb_v1", "sthm_mm_v1")
         val cellLog = new StateFold.Log(ceDir, identity)
@@ -1849,7 +1839,7 @@ object Streams {
     QueryDef("st35_stream_tagging",
       graft.operators.Tokens.x216OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(ixDir, mdDir) =
           fresh(d, "documents", "sttag_ix_v1", "sttag_md_v1")
         val index = new StateFold.Log(ixDir, identity)
@@ -1890,7 +1880,7 @@ object Streams {
     QueryDef("st36_stream_span_dedup",
       graft.operators.Corpus.x41OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(ixDir) = fresh(d, "documents", "stspan_ix_v1")
         val index = new StateFold.Log(ixDir, identity)
         drain(replay(ss, stage)) { batch =>
@@ -1983,7 +1973,7 @@ object Streams {
     QueryDef("st38_stream_contam_dual",
       graft.operators.Tokens.x225OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(tgDir, egDir, mdDir) = fresh(d, "documents",
           "stdual_tg_v1", "stdual_eg_v1", "stdual_md_v1")
         val trainGrams = new StateFold.Log(tgDir, _.distinct())
@@ -2051,7 +2041,7 @@ object Streams {
     QueryDef("st39_stream_waterfall",
       graft.operators.Tokens.x231OracleSql) { (s, d) =>
       withStreamingConfs(s) { ss =>
-        val stage = stageSplit(ss, d, "documents", "doc_id", "docsplit")
+        val stage = stageSplit(ss, d, Artifacts.stageDocsSplit, "doc_id")
         val Seq(mdDir, sgDir) =
           fresh(d, "documents", "stwf_md_v1", "stwf_sg_v1")
         val meta = new StateFold.Log(mdDir, identity)
@@ -2229,14 +2219,11 @@ object Streams {
   /** Stage [[graft.operators.Corpus.ccRawEdges]] as THREE batch files
     * (sliced on the generating hash — deterministic, SF-invariant) for
     * st22's file-stream source. Content-keyed on documents.parquet. */
-  private[graft] def stageCcEdgesSplit(s: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(dir, "documents.parquet")
-    stageSlices(java.nio.file.Paths.get(graft.Warehouse.path(
-      s"graft_stream_ccsplit_v1_${graft.ContentKey.key(src)}")),
+  private[graft] def stageCcEdgesSplit(s: SparkSession, dir: String): String =
+    stageSlices(java.nio.file.Paths.get(Artifacts.stageCcSplit.path(dir)),
       Seq(0, 1, 2).map(par => graft.operators.Corpus.ccRawEdges(s, dir)
         .filter(expr("(h div 3) % 3") === par)
         .select(col("src"), col("dst"))))()
-  }
 
   /** One Misra-Gries MERGE step (Agarwal et al. PODS'12 mergeable
     * summaries): given combined (word, cnt) counters, subtract the

@@ -23,18 +23,15 @@ class Round12Spec extends AnyFunSuite {
   }
 
   test("two concurrent DerivedTable builders on one key both read a consistent artifact; no torn dir, no leaked temp") {
-    val tag = "r12race"
-    val key = ContentKey.key(
-      java.nio.file.Paths.get(sf0_001, "documents.parquet"))
-    val out = Warehouse.path(
-      operators.DerivedTable.dirName(tag, 1, key))
+    val fam = Artifacts.derivedFamily("r12race", "documents", 1)
+    val out = fam.path(sf0_001)
     Publish.deleteTree(java.nio.file.Paths.get(out))
 
     val barrier = new java.util.concurrent.CyclicBarrier(2)
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     def build(): Array[(Long, Long)] = {
       barrier.await() // both threads pass the isPublished check together
-      val df = operators.DerivedTable(spark, sf0_001, "documents", tag) {
+      val df = operators.DerivedTable(spark, sf0_001, fam) {
         builds.incrementAndGet()
         Thread.sleep(50) // widen the race window
         Tables.documents(spark, sf0_001)
@@ -57,7 +54,7 @@ class Round12Spec extends AnyFunSuite {
       assert(builds.get() == 2,
         "the barrier must have forced BOTH builders past the published check")
       assert(Publish.isPublished(out), "the winner's artifact is published")
-      assert(tempDirs(operators.DerivedTable.dirName(tag, 1, key)).isEmpty,
+      assert(tempDirs(java.nio.file.Paths.get(out).getFileName.toString).isEmpty,
         "the loser's temp dir must be cleaned up")
     } finally pool.shutdown()
   }
@@ -109,7 +106,8 @@ class Round12Spec extends AnyFunSuite {
     val staleVersion = "graft_fact_v1_00deadbeef001122"
     val staleContent = "graft_fact_v2_0000000000000000"
     val staleDerived = // old builderVersion of a DerivedTable family
-      operators.DerivedTable.livePrefix("kmeans", 99) + "0011223344556677"
+      Artifacts.derivedFamily("kmeans", "embeddings", 99)
+        .dirName("0011223344556677")
     val unknown = "not_ours_at_all"
     val scratchStale = "graft_scratch_rdeadbeef"
     val scratchLive = s"graft_scratch_r${Publish.runToken}"
@@ -155,8 +153,16 @@ class Round12Spec extends AnyFunSuite {
     // age column; the family coverage check applies to the rest
     val rows = all.filter(_.getAs[String]("family") != "unknown")
     val fams = rows.map(_.getAs[String]("family")).toSet
-    assert(operators.ArtifactVacuum.families.map(_.name).toSet == fams,
+    assert(Artifacts.all.map(_.name).toSet == fams,
       "every registered family must appear in the manifest")
+    // registry invariants: liveNames keys its map by prefix + key, so a
+    // duplicate prefix would silently collapse two families into one
+    assert(Artifacts.all.map(_.name).distinct.size == Artifacts.all.size,
+      "family names must be distinct")
+    assert(Artifacts.all.map(_.prefix).distinct.size == Artifacts.all.size,
+      "family prefixes must be distinct")
+    Artifacts.all.foreach(f => assert(f.prefix.startsWith(f.stem),
+      s"${f.name}: prefix ${f.prefix} must start with its stem ${f.stem}"))
     // the spec suite has built at least one artifact by now; the manifest
     // must observe SOME built artifact for the queried root
     val n = rows.count(_.getAs[Boolean]("is_built"))
@@ -164,55 +170,21 @@ class Round12Spec extends AnyFunSuite {
   }
 
   test("vacuum registry lint: every DerivedTable call site and Warehouse name literal in main source is registered") {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val srcs = walk(new java.io.File("src/main/scala/graft"))
-      .map(f => new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-    // 1) literal-tag DerivedTable call sites → (tag, srcTable, bv)
-    val call =
-      """DerivedTable\(\s*\w+,\s*\w+,\s*"(\w+)",\s*"(\w+)"""".r
-    val sites = srcs.flatMap { s =>
-      call.findAllMatchIn(s).map { m =>
-        val tail = s.substring(m.end, math.min(s.length, m.end + 160))
-          .takeWhile(_ != '{')
-        val bv = "builderVersion\\s*=\\s*(\\d+)".r
-          .findFirstMatchIn(tail).map(_.group(1).toInt).getOrElse(1)
-        (m.group(2), m.group(1), bv)
+    // Structural: a warehouse artifact name is made only in Artifacts.scala,
+    // whose declaring helpers register every family they make. Builders
+    // take a Family (DerivedTable, stageSplit) or call family.path, so a
+    // name that bypasses the registry has to spell one of these.
+    val patterns = Seq("Warehouse.path(", "Family(")
+    val hits = MainSource.code().flatMap { case (f, code) =>
+      code.zipWithIndex.collect { case (l, i) if patterns.exists(l.contains) =>
+        (f.getName, i + 1, l.trim)
       }
-    }.toSet
-    // 2) the one dynamic-tag site (Similarity.indexed) is called only with
-    //    "lsh" — counted explicitly so a second dynamic site can't hide
-    val dynamic = srcs.map(s =>
-      """DerivedTable\(\s*\w+,\s*\w+,\s*"(\w+)",\s*tag""".r
-        .findAllMatchIn(s).size).sum
-    assert(dynamic == 1,
-      "a new dynamic-tag DerivedTable wrapper needs its own lint coverage")
-    val all = sites + (("lsh", "embeddings", 1))
-    assert(all == operators.ArtifactVacuum.derivedSpecs.toSet,
-      s"DerivedTable call sites drifted from the vacuum registry:\n" +
-        s"  in code: ${all.toSeq.sorted}\n" +
-        s"  registered: ${operators.ArtifactVacuum.derivedSpecs.sorted}")
-    // 3) every content-keyed Warehouse name literal maps to a registered
-    //    current-version prefix (scratch literals live under Scratch and
-    //    are classified by token, not by family)
-    val lit = """(?s)(?:Warehouse\.path\(|tmp\()\s*s"(g(?:raft|_user)_[a-z0-9_]+?v\d+_)""".r
-    val prefixes = operators.ArtifactVacuum.families.map(_.prefix).toSet
-    val lits = srcs.flatMap(s => lit.findAllMatchIn(s).map(_.group(1))).toSet
-    assert(lits.nonEmpty && lits.subsetOf(prefixes),
-      s"unregistered warehouse name literals: ${lits.diff(prefixes)}")
-    // 4) a name whose stem is interpolated before its version
-    //    (s"graft_stream_${prefix}_v1_…") escapes the literal check above.
-    //    The one such site (Streams.stageSplit) has its own test in
-    //    StreamingSemanticsSpec — counted explicitly so a second one
-    //    can't hide
-    val stem = """(?s)(?:Warehouse\.path\(|tmp\()\s*s"(g(?:raft|_user)_[a-z0-9_]*)\$\{""".r
-    val interpolated = srcs.flatMap(s => stem.findAllMatchIn(s).map(_.group(1)))
-      .filterNot(p => """v\d+_""".r.findFirstIn(p).isDefined)
-    assert(interpolated == Seq("graft_stream_"),
-      "a new interpolated-stem warehouse name needs its own lint coverage: " +
-        interpolated.mkString(", "))
+    }
+    val (ok, bad) = hits.partition(_._1 == "Artifacts.scala")
+    assert(bad.isEmpty, "a warehouse artifact name is made outside " +
+      s"Artifacts.scala (declare a family there): ${bad.mkString("; ")}")
+    // the scan must see the registry's own constructions, or it proves nothing
+    patterns.foreach(p => assert(ok.exists(_._3.contains(p)), s"no $p found in Artifacts.scala"))
   }
 
   test("x199: the curation run's conservation telescopes, and tokens are conserved into bins") {

@@ -106,7 +106,7 @@ class Round6Spec extends AnyFunSuite {
     // production caller (the streaming conf scope) provides
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val stage = graft.streaming.Streams.stageSplit(spark, sf0_001,
-      "events", "event_id", "split")
+      Artifacts.stageEventsSplit, "event_id")
     val files = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
     val parquets = try files.filter(_.toString.endsWith(".parquet")).count()
       finally files.close()

@@ -987,7 +987,7 @@ class Round9Spec extends AnyFunSuite {
     // both micro-batches carry real mass (a single-batch run would make
     // the additive-merge claim vacuous)
     val stage = streaming.Streams.stageSplit(spark, sf0_001,
-      "documents", "doc_id", "docsplit")
+      Artifacts.stageDocsSplit, "doc_id")
     Seq(0, 1).foreach { p =>
       assert(spark.read.parquet(s"$stage/batch_$p.parquet").count() > 0,
         s"document half $p must be non-empty")

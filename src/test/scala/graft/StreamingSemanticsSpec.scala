@@ -237,28 +237,20 @@ class StreamingSemanticsSpec extends AnyFunSuite {
       compact)
     val scope = ("""^(\s*)(?:(?:private|protected)(?:\[\w+\])?\s+)?(?:final\s+)?""" +
       """(?:def|val|lazy val|object|class|trait)\s+(\w+)""").r
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val files = walk(new java.io.File("src/main/scala"))
-    assert(files.exists(_.getName == "Streams.scala"), "lint scanned no source")
-    val hits = files.flatMap { f =>
-      var inDoc = false
-      // code only: scaladoc/block comments and line-comment tails removed
-      val code = scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.map { l =>
-        val t = l.trim
-        if (inDoc) { if (t.contains("*/")) inDoc = false; "" }
-        else if (t.startsWith("/*")) { inDoc = !t.contains("*/"); "" }
-        else l.split("//", 2)(0)
-      }
+    val files = MainSource.code()
+    assert(files.exists(_._1.getName == "Streams.scala"), "lint scanned no source")
+    val hits = files.flatMap { case (f, code) =>
       def indent(l: String) = l.takeWhile(_ == ' ').length
       code.zipWithIndex.collect { case (l, i) if patterns.exists(l.contains) =>
-        // the enclosing scopes, innermost first
+        // the enclosing scopes, innermost first: walking up, a scope line
+        // encloses the hit only if it is less indented than every code
+        // line passed so far (a less-indented sibling is not an owner)
         val owners = (i - 1 to 0 by -1).foldLeft((indent(l), List.empty[String])) {
-          case ((lim, acc), j) => scope.findFirstMatchIn(code(j)) match {
-            case Some(m) if m.group(1).length < lim => (m.group(1).length, m.group(2) :: acc)
-            case _ => (lim, acc)
-          }
+          case ((lim, acc), j) =>
+            val owner = scope.findFirstMatchIn(code(j))
+              .filter(_.group(1).length < lim).map(_.group(2))
+            val next = if (code(j).trim.isEmpty) lim else math.min(lim, indent(code(j)))
+            (next, owner.fold(acc)(_ :: acc))
         }._2.reverse
         (f.getName, i + 1, owners, l.trim)
       }
@@ -277,19 +269,10 @@ class StreamingSemanticsSpec extends AnyFunSuite {
   }
 
   test("stageSplit call sites publish under registered staging directory names") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/streaming/Streams.scala")), "UTF-8")
-    val sites = """stageSplit\(ss, d, "(\w+)", "(\w+)", "(\w+)"\)""".r
-      .findAllMatchIn(src).map(m => (m.group(1), m.group(2), m.group(3))).toSet
-    assert(sites == Set(("events", "event_id", "split"),
-      ("documents", "doc_id", "docsplit"), ("orders", "o_orderkey", "ordsplit"),
-      ("part", "p_partkey", "partsplit"), ("embeddings", "vec_id", "vecsplit")))
-    val families = operators.ArtifactVacuum.families.map(f => (f.srcTable, f.prefix)).toSet
-    sites.foreach { case (table, _, prefix) =>
-      assert(families.contains((table, s"graft_stream_${prefix}_v1_")),
-        s"$table split stage is not a registered vacuum family")
-    }
-    val stage = Streams.stageSplit(spark, sf0_001, "documents", "doc_id", "docsplit")
+    // call sites pass an Artifacts family (a Round12Spec lint keeps every
+    // warehouse name in Artifacts.scala); the published dir is its prefix
+    // plus the source's content key
+    val stage = Streams.stageSplit(spark, sf0_001, Artifacts.stageDocsSplit, "doc_id")
     assert(java.nio.file.Paths.get(stage).getFileName.toString ==
       "graft_stream_docsplit_v1_" +
         ContentKey.key(java.nio.file.Paths.get(sf0_001, "documents.parquet")))
