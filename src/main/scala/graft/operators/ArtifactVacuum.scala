@@ -58,27 +58,40 @@ object ArtifactVacuum {
     (d +: sibs).distinct.sortBy(_.toString)
   }
 
-  /** Current content key of (root, srcTable), or None when the root lacks
-    * that table (no live name to protect, none to compute). */
-  private def keyOf(root: Path, srcTable: String): Option[String] = {
-    val f = root.resolve(s"$srcTable.parquet")
-    if (Files.exists(f)) Some(graft.ContentKey.key(f)) else None
+  /** Every live (family, root, content key): one per family × root that
+    * carries the family's source table. Each (root, srcTable) content key
+    * is digested once and shared by every family over that table; a root
+    * lacking the table has no live name to protect and none to compute. */
+  private def liveArtifacts(
+      roots: Seq[Path]): Seq[(Artifacts.Family, Path, String)] = {
+    val keys = (for {
+      r <- roots
+      t <- Artifacts.all.map(_.srcTable).distinct
+      f = r.resolve(s"$t.parquet") if Files.exists(f)
+    } yield (r, t) -> graft.ContentKey.key(f)).toMap
+    for {
+      f <- Artifacts.all
+      r <- roots
+      k <- keys.get((r, f.srcTable))
+    } yield (f, r, k)
   }
+
+  private def namesOf(live: Seq[(Artifacts.Family, Path, String)]) =
+    live.map { case (f, _, k) => f.dirName(k) -> f }.toMap
 
   /** Every live artifact name for the given roots. */
   def liveNames(roots: Seq[Path]): Map[String, Artifacts.Family] =
-    (for {
-      f <- Artifacts.all
-      r <- roots
-      k <- keyOf(r, f.srcTable)
-    } yield f.dirName(k) -> f).toMap
+    namesOf(liveArtifacts(roots))
 
   /** Classify every top-level warehouse entry. Classes: live,
     * stale_version, stale_content, scratch_live, scratch_stale,
     * temp_orphan, unknown. */
   def classify(warehouseRoot: String,
-      roots: Seq[Path]): Seq[(String, String, String)] = {
-    val live = liveNames(roots)
+      roots: Seq[Path]): Seq[(String, String, String)] =
+    classifyAgainst(warehouseRoot, liveNames(roots))
+
+  private def classifyAgainst(warehouseRoot: String,
+      live: Map[String, Artifacts.Family]): Seq[(String, String, String)] = {
     val byStem = Artifacts.all.sortBy(-_.stem.length) // longest stem wins
     val entries = {
       val l = Files.list(Paths.get(warehouseRoot))
@@ -143,18 +156,14 @@ object ArtifactVacuum {
     * design (a catalog/metadata listing, bounded by |families|×|roots| +
     * |unknown entries|). */
   def manifest(s: SparkSession, dir: String): DataFrame = {
-    val roots = liveRoots(dir)
-    val cls = classify(graft.Warehouse.root, roots)
+    val live = liveArtifacts(liveRoots(dir))
+    val cls = classifyAgainst(graft.Warehouse.root, namesOf(live))
     val byFam = cls
       .groupBy(_._3).map { case (f, es) =>
         f -> (es.count(_._2 == "stale_version").toLong,
           es.count(_._2 == "stale_content").toLong)
       }
-    val rows = for {
-      f <- Artifacts.all
-      r <- roots
-      k <- keyOf(r, f.srcTable)
-    } yield {
+    val rows = live.map { case (f, r, k) =>
       val (sv, sc) = byFam.getOrElse(f.name, (0L, 0L))
       Row(f.name, f.srcTable, r.getFileName.toString, f.dirName(k),
         Files.exists(Paths.get(f.pathOf(k))), sv, sc, null)

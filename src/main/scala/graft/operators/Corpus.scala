@@ -1218,10 +1218,9 @@ object Corpus {
       import graft.functions.{SketchAgg, Sketches}
       val tri = Dedup.shingleTable(s, d)
         .join(TextAnalysis.fingerprintTable(s, d), "doc_id")
-        .withColumn("bucket", col("fp") % 100)
+        .withColumn("bucket", TextAnalysis.fpBucket)
         .select(col("doc_id"),
-          when(col("bucket") < 80, "train").when(col("bucket") < 90, "val")
-            .otherwise("test").as("split"),
+          TextAnalysis.splitLabel(col("bucket")).as("split"),
           col("tri"))
       // feeds the bloom build AND the exact verify join (x23's pattern);
       // the gram set AND the bitset are persisted ingest artifacts — the
@@ -1824,8 +1823,8 @@ object Corpus {
       val tg = TextAnalysis.trainGramTable(s, d)
       val split = Dedup.shingleTable(s, d)
         .join(TextAnalysis.fingerprintTable(s, d), "doc_id")
-        .select(col("tri"), (col("fp") % 100).as("bucket"))
-      val neg = split.filter(col("bucket") >= 80)
+        .select(col("tri"), TextAnalysis.fpBucket.as("bucket"))
+      val neg = split.filter(TextAnalysis.isHeldOut(col("bucket")))
         .select(explode(col("tri")).as("g")).distinct()
         .join(tg, Seq("g"), "left_anti")
         .localCheckpoint() // probes AND the n_neg count read it

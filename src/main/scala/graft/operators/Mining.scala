@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -76,7 +77,8 @@ object Mining {
         .select(col("doc_id"), col("text"))
         .join(TextAnalysis.fingerprintTable(s, d), "doc_id")
         .select(col("doc_id"),
-          when(col("fp") % 100 < 80, "train").otherwise("other").as("split"),
+          when(TextAnalysis.isTrain(TextAnalysis.fpBucket), "train")
+            .otherwise("other").as("split"),
           col("text"))
       val bg = sp.select(col("doc_id"), col("split"),
           explode(Text.rawShingles(col("text"), 2)).as("bigram"))
@@ -202,33 +204,14 @@ object Mining {
         |FROM dcg, idcg, mrr, p""".stripMargin
       }) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      def tfc(term: String) =
-        size(filter(Text.tokens(col("text")), w => w === term)).cast("long")
-      def dfc(term: String) =
-        sum(when(array_contains(Text.tokens(col("text")), term), 1)
-          .otherwise(0)).cast("long")
       val docs = Tables.documents(s, d)
-      val stats = docs.agg(
-        count(lit(1)).as("n_docs"),
-        sum(size(Text.tokens(col("text")))).cast("long").as("total_len"),
-        dfc("spark").as("df_spark"), dfc("join").as("df_join"),
-        dfc("window").as("df_window"))
-      val per = docs.select(col("doc_id"),
-        size(Text.tokens(col("text"))).cast("long").as("dl"),
-        tfc("spark").as("tf_spark"), tfc("join").as("tf_join"),
-        tfc("window").as("tf_window"))
-      def part(tf: String, df: String) =
-        ((col("n_docs") - col(df) + 0.5) / (col(df) + 0.5)) *
-          (col(tf) * 2.2) /
-          (col(tf) + lit(1.2) * (lit(0.25)
-            + lit(0.75) * col("dl") * col("n_docs") / col("total_len")))
-      val scored = per.crossJoin(broadcast(stats)).select(col("doc_id"),
-        ((when(col("tf_spark") > 0, 1).otherwise(0))
-          + (when(col("tf_join") > 0, 1).otherwise(0))
-          + (when(col("tf_window") > 0, 1).otherwise(0))).cast("int").as("rel"),
-        Num.roundOut(part("tf_spark", "df_spark")
-          + part("tf_join", "df_join")
-          + part("tf_window", "df_window"), 4).as("bm25"))
+      val scored = bm25Terms(docs).crossJoin(broadcast(bm25Stats(docs)))
+        .select(col("doc_id"),
+          ((when(col("tf_spark") > 0, 1).otherwise(0))
+            + (when(col("tf_join") > 0, 1).otherwise(0))
+            + (when(col("tf_window") > 0, 1).otherwise(0))).cast("int")
+            .as("rel"),
+          bm25Score.as("bm25"))
         .localCheckpoint() // both takes (ranked + ideal) read it once
       val invLog = array((1 to 10).map(r =>
         lit(1.0 / (math.log(r + 1.0) / math.log(2.0)))): _*)
@@ -491,33 +474,10 @@ object Mining {
         |         4) AS bm25
         |FROM per, stats
         |ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
-      def tf(term: String) =
-        size(filter(Text.tokens(col("text")), w => w === term)).cast("long")
-      def df(term: String) =
-        sum(when(array_contains(Text.tokens(col("text")), term), 1)
-          .otherwise(0)).cast("long")
       val docs = Tables.documents(s, d)
-      val stats = docs.agg(
-        count(lit(1)).as("n_docs"),
-        sum(size(Text.tokens(col("text")))).cast("long").as("total_len"),
-        df("spark").as("df_spark"), df("join").as("df_join"),
-        df("window").as("df_window"))
-      val per = docs.select(col("doc_id"),
-        size(Text.tokens(col("text"))).cast("long").as("dl"),
-        tf("spark").as("tf_spark"), tf("join").as("tf_join"),
-        tf("window").as("tf_window"))
-      // the shared BM25 length normalizer, written once — the SQL mirror
-      // repeats it inline per term, which is the identical expression tree
-      def norm = lit(1.2) * (lit(0.25) +
-        lit(0.75) * col("dl") * col("n_docs") / col("total_len"))
-      def score(t: String) =
-        ((col("n_docs") - col(s"df_$t") + 0.5) / (col(s"df_$t") + 0.5)) *
-          (col(s"tf_$t") * 2.2) / (col(s"tf_$t") + norm)
-      per.crossJoin(broadcast(stats))
+      bm25Terms(docs).crossJoin(broadcast(bm25Stats(docs)))
         .select(col("doc_id"), col("dl"), col("tf_spark"), col("tf_join"),
-          col("tf_window"),
-          Num.roundOut(score("spark") + score("join") + score("window"), 4)
-            .as("bm25"))
+          col("tf_window"), bm25Score.as("bm25"))
         .orderBy(col("bm25").desc, col("doc_id"))
         .limit(20)
     },
@@ -574,21 +534,9 @@ object Mining {
         |FROM per, stats
         |ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
       val merged = Mining.bm25MergedStats(s, d)
-      def tf(term: String) =
-        size(filter(Text.tokens(col("text")), w => w === term)).cast("long")
-      val per = Tables.documents(s, d).select(col("doc_id"),
-        size(Text.tokens(col("text"))).cast("long").as("dl"),
-        tf("spark").as("tf_spark"), tf("join").as("tf_join"),
-        tf("window").as("tf_window"))
-      def norm = lit(1.2) * (lit(0.25) +
-        lit(0.75) * col("dl") * col("n_docs") / col("total_len"))
-      def score(t: String) =
-        ((col("n_docs") - col(s"df_$t") + 0.5) / (col(s"df_$t") + 0.5)) *
-          (col(s"tf_$t") * 2.2) / (col(s"tf_$t") + norm)
-      per.crossJoin(broadcast(merged))
+      bm25Terms(Tables.documents(s, d)).crossJoin(broadcast(merged))
         .select(col("doc_id"), (col("doc_id") % 10 === 7).as("from_delta"),
-          Num.roundOut(score("spark") + score("join") + score("window"), 4)
-            .as("bm25"))
+          bm25Score.as("bm25"))
         .orderBy(col("bm25").desc, col("doc_id"))
         .limit(20)
     },
@@ -837,10 +785,9 @@ object Mining {
       import org.apache.spark.sql.expressions.Window
       val sh = Dedup.shingleTable(s, d)
         .join(TextAnalysis.fingerprintTable(s, d), "doc_id")
-        .withColumn("bucket", col("fp") % 100)
+        .withColumn("bucket", TextAnalysis.fpBucket)
         .select(col("doc_id"),
-          when(col("bucket") < 80, "train").when(col("bucket") < 90, "val")
-            .otherwise("test").as("split"),
+          TextAnalysis.splitLabel(col("bucket")).as("split"),
           col("tri"))
         .filter(size(col("tri")) > 0)
       val sz = sh.select(col("doc_id"), col("split"), size(col("tri")).as("n"))
@@ -1144,30 +1091,9 @@ object Mining {
         |FROM bt FULL JOIN dt ON bt.doc_id = dt.doc_id
         |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      def tf(term: String) =
-        size(filter(Text.tokens(col("text")), w => w === term)).cast("long")
-      def df(term: String) =
-        sum(when(array_contains(Text.tokens(col("text")), term), 1)
-          .otherwise(0)).cast("long")
       val docs = Tables.documents(s, d)
-      val stats = docs.agg(
-        count(lit(1)).as("n_docs"),
-        sum(size(Text.tokens(col("text")))).cast("long").as("total_len"),
-        df("spark").as("df_spark"), df("join").as("df_join"),
-        df("window").as("df_window"))
-      val per = docs.select(col("doc_id"),
-        size(Text.tokens(col("text"))).cast("long").as("dl"),
-        tf("spark").as("tf_spark"), tf("join").as("tf_join"),
-        tf("window").as("tf_window"))
-      def norm = lit(1.2) * (lit(0.25) +
-        lit(0.75) * col("dl") * col("n_docs") / col("total_len"))
-      def score(t: String) =
-        ((col("n_docs") - col(s"df_$t") + 0.5) / (col(s"df_$t") + 0.5)) *
-          (col(s"tf_$t") * 2.2) / (col(s"tf_$t") + norm)
-      val bm = per.crossJoin(broadcast(stats))
-        .select(col("doc_id"),
-          Num.roundOut(score("spark") + score("join") + score("window"), 4)
-            .as("bm25"))
+      val bm = bm25Terms(docs).crossJoin(broadcast(bm25Stats(docs)))
+        .select(col("doc_id"), bm25Score.as("bm25"))
       // top-64 via TakeOrderedAndProject; the rank window then runs on 64
       // rows (bounded by K, not the corpus — the x18 global-window rule)
       val bt = bm.orderBy(col("bm25").desc, col("doc_id")).limit(64)
@@ -3141,35 +3067,52 @@ object Mining {
         expr("n_docs * l * 1000000 div (n_seqs * 512)").as("fill_ppm"))
       .orderBy(col("len"))
 
-  /** One BM25 corpus-stats partial over a document slice — the mergeable
-    * index-metadata row (every field a plain count/sum). */
-  private def bm25SliceStats(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    def df(term: String) =
-      sum(when(array_contains(Text.tokens(col("text")), term), 1)
-        .otherwise(0)).cast("long")
+  /** The fixed BM25 query of x48, x74, x116 and x129. */
+  private val bm25QueryTerms = Seq("spark", "join", "window")
+
+  /** BM25 corpus stats over a document slice: (n_docs, total_len,
+    * df_<term>) — x48's stats row and the mergeable index metadata of
+    * x129 (every field a plain count/sum, so slice rows add up to the
+    * full-corpus row). */
+  private[graft] def bm25Stats(docs: DataFrame): DataFrame =
     docs.agg(count(lit(1)).as("n_docs"),
-      sum(size(Text.tokens(col("text")))).cast("long").as("total_len"),
-      df("spark").as("df_spark"), df("join").as("df_join"),
-      df("window").as("df_window"))
+      sum(size(Text.tokens(col("text")))).cast("long").as("total_len") +:
+        bm25QueryTerms.map(t =>
+          sum(when(array_contains(Text.tokens(col("text")), t), 1)
+            .otherwise(0)).cast("long").as(s"df_$t")): _*)
+
+  /** Per-document BM25 inputs: (doc_id, dl, tf_<term>). */
+  private[graft] def bm25Terms(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id") +:
+      size(Text.tokens(col("text"))).cast("long").as("dl") +:
+      bm25QueryTerms.map(t =>
+        size(filter(Text.tokens(col("text")), w => w === t)).cast("long")
+          .as(s"tf_$t")): _*)
+
+  /** BM25 (k1=1.2, b=0.75, rational Robertson idf) of a [[bm25Terms]] row
+    * crossed with a [[bm25Stats]] row, rounded to 4 decimals. The oracle
+    * SQL repeats the length normalizer inline per term, which is the
+    * identical expression tree. */
+  private[graft] val bm25Score: Column = {
+    val norm = lit(1.2) * (lit(0.25) +
+      lit(0.75) * col("dl") * col("n_docs") / col("total_len"))
+    Num.roundOut(bm25QueryTerms.map { t =>
+      ((col("n_docs") - col(s"df_$t") + 0.5) / (col(s"df_$t") + 0.5)) *
+        (col(s"tf_$t") * 2.2) / (col(s"tf_$t") + norm)
+    }.reduce(_ + _), 4)
   }
 
   /** x129's maintained stats: base-slice partial + Δ-slice partial,
-    * SUMMED — must equal the from-scratch full-corpus row field-for-field
-    * (Round8Spec pins it; the oracle's scratch recompute proves it again
-    * end-to-end through the scores). */
-  private[graft] def bm25MergedStats(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
+    * SUMMED — must equal x48's [[bm25Stats]] of the full corpus
+    * field-for-field (Round8Spec pins it; the oracle's scratch recompute
+    * proves it again end-to-end through the scores). */
+  private[graft] def bm25MergedStats(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    bm25SliceStats(docs.filter(col("doc_id") % 10 =!= 7))
-      .unionByName(bm25SliceStats(docs.filter(col("doc_id") % 10 === 7)))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("total_len")).as("total_len"),
-        sum(col("df_spark")).as("df_spark"),
-        sum(col("df_join")).as("df_join"),
-        sum(col("df_window")).as("df_window"))
+    val fields = Seq("n_docs", "total_len") ++ bm25QueryTerms.map(t => s"df_$t")
+    bm25Stats(docs.filter(col("doc_id") % 10 =!= 7))
+      .unionByName(bm25Stats(docs.filter(col("doc_id") % 10 === 7)))
+      .agg(sum(col(fields.head)).as(fields.head),
+        fields.tail.map(f => sum(col(f)).as(f)): _*)
   }
-
-  /** The from-scratch full-corpus stats row (x48's), exposed for the
-    * Round8Spec merged==full pin. */
-  private[graft] def bm25FullStats(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    bm25SliceStats(Tables.documents(s, d))
 }

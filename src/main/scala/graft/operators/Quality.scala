@@ -479,7 +479,7 @@ object Quality {
     DerivedTable(s, d, Artifacts.qweightstr) {
       val tr = Tables.documents(s, d)
         .join(TextAnalysis.fingerprintTable(s, d), "doc_id")
-        .filter(col("fp") % 100 < 80)
+        .filter(TextAnalysis.isTrain(TextAnalysis.fpBucket))
         .select(col("doc_id"), col("text"))
       trainFromCells(featureCells(tr), labelTable(tr))
         .select(col("b"), col("w").as("w_micro"))
@@ -579,8 +579,8 @@ object Quality {
     def slice(pred: org.apache.spark.sql.Column) =
       Tables.documents(s, d).join(fp.filter(pred), "doc_id")
         .select(col("doc_id"), col("text"))
-    val tr = slice(col("fp") % 100 < 80)
-    val va = slice(col("fp") % 100 >= 80 && col("fp") % 100 < 90)
+    val tr = slice(TextAnalysis.isTrain(TextAnalysis.fpBucket))
+    val va = slice(TextAnalysis.isVal(TextAnalysis.fpBucket))
     trainValidated(featureCells(tr), labelTable(tr),
       featureCells(va), labelTable(va))
   }
@@ -1116,8 +1116,7 @@ object Quality {
         .groupBy(col("doc_id")).agg(sum(col("fq") * col("w")).as("zmm"))
       val spl = TextAnalysis.fingerprintTable(s, d)
         .select(col("doc_id"),
-          when(col("fp") % 100 < 80, "train")
-            .when(col("fp") % 100 < 90, "val").otherwise("test").as("split"))
+          TextAnalysis.splitLabel(TextAnalysis.fpBucket).as("split"))
       val correct = (col("zmm") > 0) === (col("y") === 1)
       sc.join(labelTable(docs), "doc_id")
         .join(spl, "doc_id")

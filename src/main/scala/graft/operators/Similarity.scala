@@ -36,28 +36,34 @@ object Similarity {
   private def cosine(va: Column, na: Column, vb: Column, nb: Column): Column =
     dot(va, vb) / na / nb
 
-  /** Assign normed vectors (vec_id, v, nrm) to their rk≤2 nearest
-    * centroids of the FROZEN codebook — the per-vector-independent IVF
-    * assignment step shared by x101's Δ pass and st21's streaming fold
-    * (one definition, so batch and stream cannot drift). */
-  private[graft] def assignFrozen(n: DataFrame, cents: DataFrame): DataFrame = {
+  /** The frozen IVF codebook over normed vectors (vec_id, v, nrm): every
+    * 50th vector is a centroid (cent_id, cv, cn). */
+  private[graft] def frozenCents(n: DataFrame): DataFrame =
+    n.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
+        col("nrm").as("cn"))
+
+  /** Rounded cosine of a normed vector (v, nrm) to a centroid (cv, cn):
+    * the score IVF assignment ranks on. */
+  private[graft] val centSim: Column =
+    Num.roundOut(cosine(col("v"), col("nrm"), col("cv"), col("cn")), 6)
+
+  /** Assign normed vectors (vec_id, v, nrm) to their rk≤k nearest
+    * centroids of the frozen codebook ([[frozenCents]]), ties to the lower
+    * cent_id. Per-vector independent, so the x14/x83 index builders,
+    * x101's Δ pass and st21's streaming fold all call it and cannot
+    * drift. */
+  private[graft] def assignFrozen(n: DataFrame, cents: DataFrame,
+      k: Int): DataFrame = {
     val wAssign = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cent_id"))
     n.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("v"), col("nrm"), col("cent_id"),
-        Num.roundOut(dot(col("v"), col("cv")) / col("nrm") / col("cn"), 6)
-          .as("sim"))
+        centSim.as("sim"))
       .withColumn("rk", row_number().over(wAssign))
-      .filter(col("rk") <= 2)
+      .filter(col("rk") <= k)
       .select(col("vec_id"), col("v"), col("nrm"), col("rk"), col("cent_id"))
   }
-
-  /** The frozen centroid codebook (every 50th vector), normed. */
-  private[graft] def frozenCents(s: SparkSession, d: String): DataFrame =
-    withNorm(Tables.embeddings(s, d))
-      .filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
 
   /** x101's relational answer — shared VERBATIM with st21's streaming
     * index maintenance (the x119↔st19 contract applied to ANN serving). */
@@ -413,18 +419,7 @@ object Similarity {
       val assigned4 = DerivedTable(s, d, Artifacts.ivf4,
           Seq("cent_id")) {
         val n = withNorm(Tables.embeddings(s, d))
-        val cents = n.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-            col("nrm").as("cn"))
-        val wAssign = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cent_id"))
-        n.crossJoin(broadcast(cents))
-          .select(col("vec_id"), col("v"), col("nrm"), col("cent_id"),
-            Num.roundOut(dot(col("v"), col("cv")) / col("nrm") / col("cn"), 6)
-              .as("sim"))
-          .withColumn("rk", row_number().over(wAssign))
-          .filter(col("rk") <= 4)
-          .select(col("vec_id"), col("v"), col("nrm"), col("rk"), col("cent_id"))
+        assignFrozen(n, frozenCents(n), 4)
       }
       val corpus = assigned4.filter(col("rk") === 1)
         .select(col("vec_id"), col("v"), col("nrm"), col("cent_id"))
@@ -1696,19 +1691,15 @@ object Similarity {
         |FROM g ORDER BY cent_id""".stripMargin) { (s, d) =>
       // the persisted inverted file holds (vec_id, v, nrm, cent_id) but
       // not the assignment sim — recompute the member↔centroid affinity
-      // with the same broadcast-centroid expression the index was built
-      // with (bit-identical rounded sims)
+      // from the same codebook and score the index was built with
+      // (bit-identical rounded sims)
       val members = ivfAssignedTable(s, d).filter(col("rk") === 1)
         .select(col("vec_id"), col("v"), col("nrm"), col("cent_id"))
-      val cents = withNorm(Tables.embeddings(s, d))
-        .filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
+      val cents = frozenCents(withNorm(Tables.embeddings(s, d)))
       members.join(broadcast(cents), "cent_id")
         .select(col("cent_id"),
           (col("vec_id") % 10 === 3).as("dead"),
-          floor(Num.roundOut(dot(col("v"), col("cv")) / col("nrm") / col("cn"), 6)
-            * 1000000).cast("long").as("sim_micro"))
+          floor(centSim * 1000000).cast("long").as("sim_micro"))
         .groupBy(col("cent_id"))
         .agg(sum(when(col("dead"), 0L).otherwise(1L)).as("n_live"),
           sum(when(col("dead"), 1L).otherwise(0L)).as("n_dead"),
@@ -1797,10 +1788,7 @@ object Similarity {
         .groupBy(col("cent_id")).agg(count(lit(1)).as("n_vecs"))
       val t = sizes.agg(sum(col("n_vecs")).as("total"),
         count(lit(1)).as("k"))
-      val cents = withNorm(Tables.embeddings(s, d))
-        .filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
+      val cents = frozenCents(withNorm(Tables.embeddings(s, d)))
         .localCheckpoint() // both sides of the k×k pair table read it
       val nn = cents.select(col("cent_id").as("ca"), col("cv").as("va"),
           col("cn").as("na"))
@@ -1808,7 +1796,7 @@ object Similarity {
           col("cv").as("vb"), col("cn").as("nb"))))
         .filter(col("ca") =!= col("cb"))
         .select(col("ca"), col("cb"),
-          Num.roundOut(dot(col("va"), col("vb")) / col("na") / col("nb"), 6)
+          Num.roundOut(cosine(col("va"), col("na"), col("vb"), col("nb")), 6)
             .as("sim"))
         .withColumn("rnn", row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("ca"))
@@ -1928,7 +1916,7 @@ object Similarity {
           col("cv").as("vb"), col("cn").as("nb")), Seq("query_id"))
         .filter(col("ca") =!= col("cb"))
         .select(col("query_id"), col("ca"), col("cb"),
-          Num.roundOut(dot(col("va"), col("vb")) / col("na") / col("nb"), 6)
+          Num.roundOut(cosine(col("va"), col("na"), col("vb"), col("nb")), 6)
             .as("sim"))
         .localCheckpoint() // 4×12×11 rows; read by four greedy rounds
       val candSlim = cand.select(col("query_id"), col("cand_id"), col("rel"))
@@ -2276,7 +2264,7 @@ object Similarity {
           col("cv").as("vb"), col("cn").as("nb")), Seq("query_id"))
         .filter(col("ca") =!= col("cb"))
         .select(col("query_id"), col("ca"), col("cb"),
-          Num.roundOut(dot(col("va"), col("vb")) / col("na") / col("nb"), 6)
+          Num.roundOut(cosine(col("va"), col("na"), col("vb"), col("nb")), 6)
             .as("sim"))
         .localCheckpoint()
       val slim = cand.select(col("query_id"), col("cand_id"), col("lbl"),
@@ -2616,18 +2604,7 @@ object Similarity {
   private[graft] def ivfAssignedTable(s: SparkSession, d: String): DataFrame =
     DerivedTable(s, d, Artifacts.ivf, Seq("cent_id")) {
       val n = withNorm(Tables.embeddings(s, d))
-      val cents = n.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
-      // assignment: nearest centroid by cosine (broadcast centroids)
-      val wAssign = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cent_id"))
-      n.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("v"), col("nrm"), col("cent_id"),
-          Num.roundOut(dot(col("v"), col("cv")) / col("nrm") / col("cn"), 6)
-            .as("sim"))
-        .withColumn("rk", row_number().over(wAssign))
-        .filter(col("rk") <= 2)
-        .select(col("vec_id"), col("v"), col("nrm"), col("rk"), col("cent_id"))
+      assignFrozen(n, frozenCents(n), 2)
     }
 
   /** x101's append-maintained index: the persisted BASE lists (artifact
@@ -2636,23 +2613,12 @@ object Similarity {
     * the full artifact row-for-row because IVF assignment is per-vector
     * independent of every other vector — Round8Spec pins the equality. */
   private[graft] def ivfAppendMerged(s: SparkSession, d: String): DataFrame = {
-    val cols = Seq("vec_id", "v", "nrm", "rk", "cent_id").map(col)
     val base = ivfAssignedTable(s, d)
-      .filter(col("vec_id") % 10 =!= 7).select(cols: _*)
+      .filter(col("vec_id") % 10 =!= 7)
+      .select("vec_id", "v", "nrm", "rk", "cent_id")
     val n = withNorm(Tables.embeddings(s, d))
-    val cents = n.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cent_id"))
-    val delta = n.filter(col("vec_id") % 10 === 7)
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("nrm"), col("cent_id"),
-        Num.roundOut(dot(col("v"), col("cv")) / col("nrm") / col("cn"), 6)
-          .as("sim"))
-      .withColumn("rk", row_number().over(wAssign))
-      .filter(col("rk") <= 2)
-      .select(cols: _*)
-    base.unionByName(delta)
+    base.unionByName(
+      assignFrozen(n.filter(col("vec_id") % 10 === 7), frozenCents(n), 2))
   }
 
   /** The encoded corpus: (vec_id, sub, cluster code, residual sq dist) —

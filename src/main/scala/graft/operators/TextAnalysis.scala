@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -56,6 +56,20 @@ object TextAnalysis {
       Tables.documents(s, d)
         .select(col("doc_id"), Text.fingerprint(col("text")).as("fp"))
     }
+
+  /** The 80/10/10 held-out split every [[fingerprintTable]] consumer
+    * shares: bucket = fp % 100; [0,80) train, [80,90) val, [90,100) test. */
+  private[operators] val fpBucket: Column = col("fp") % 100
+  private final val TrainEnd = 80
+  private final val ValEnd = 90
+  private[operators] def isTrain(bucket: Column): Column = bucket < TrainEnd
+  private[operators] def isHeldOut(bucket: Column): Column =
+    bucket >= TrainEnd
+  private[operators] def isVal(bucket: Column): Column =
+    isHeldOut(bucket) && bucket < ValEnd
+  private[operators] def splitLabel(bucket: Column): Column =
+    when(isTrain(bucket), "train").when(bucket < ValEnd, "val")
+      .otherwise("test")
 
   /** ln(256/V) for V in 1..255, computed ONCE here and used by BOTH
     * engines (interpolated into the x62 oracle as literals, loaded as a
@@ -614,10 +628,8 @@ object TextAnalysis {
         |FROM fp GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
         .join(fingerprintTable(s, d), "doc_id")
-        .withColumn("bucket", col("fp") % 100)
-        .select(col("n_chars"),
-          when(col("bucket") < 80, "train").when(col("bucket") < 90, "val")
-            .otherwise("test").as("split"))
+        .withColumn("bucket", fpBucket)
+        .select(col("n_chars"), splitLabel(col("bucket")).as("split"))
         .groupBy(col("split"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
         .orderBy(col("split"))
@@ -709,10 +721,8 @@ object TextAnalysis {
       // three consumers below re-read cheap parquet, not nested HOFs
       val sh = Dedup.shingleTable(s, d)
         .join(fingerprintTable(s, d), "doc_id")
-        .withColumn("bucket", col("fp") % 100)
-        .select(col("doc_id"),
-          when(col("bucket") < 80, "train").when(col("bucket") < 90, "val")
-            .otherwise("test").as("split"),
+        .withColumn("bucket", fpBucket)
+        .select(col("doc_id"), splitLabel(col("bucket")).as("split"),
           col("tri"))
       val trainGrams = trainGramTable(s, d)
       val ev = sh.filter(col("split") =!= "train")
@@ -837,10 +847,8 @@ object TextAnalysis {
       val sp = Tables.documents(s, d)
         .select(col("doc_id"), col("text"))
         .join(fingerprintTable(s, d), "doc_id")
-        .withColumn("bucket", col("fp") % 100)
-        .select(col("doc_id"),
-          when(col("bucket") < 80, "train").when(col("bucket") < 90, "val")
-            .otherwise("test").as("split"),
+        .withColumn("bucket", fpBucket)
+        .select(col("doc_id"), splitLabel(col("bucket")).as("split"),
           col("text"))
       val tok = sp.select(col("doc_id"), col("split"),
         explode(Text.tokens(col("text"))).as("word"))
@@ -914,10 +922,8 @@ object TextAnalysis {
       val sp = Tables.documents(s, d)
         .select(col("doc_id"), col("text"))
         .join(fingerprintTable(s, d), "doc_id")
-        .withColumn("bucket", col("fp") % 100)
-        .select(col("doc_id"),
-          when(col("bucket") < 80, "train").when(col("bucket") < 90, "val")
-            .otherwise("test").as("split"),
+        .withColumn("bucket", fpBucket)
+        .select(col("doc_id"), splitLabel(col("bucket")).as("split"),
           col("text"))
       val tok = sp.select(col("doc_id"), col("split"),
         explode(Text.tokens(col("text"))).as("word"))
@@ -3390,7 +3396,7 @@ object TextAnalysis {
     DerivedTable(s, d, Artifacts.traingrams) {
       Dedup.shingleTable(s, d)
         .join(fingerprintTable(s, d), "doc_id")
-        .filter(col("fp") % 100 < 80)
+        .filter(isTrain(fpBucket))
         .select(explode(col("tri")).as("g")).distinct()
     }
 

@@ -1138,10 +1138,11 @@ object Tokens {
   }
 
   /** The x200 train/eval split off the persisted fingerprint artifact:
-    * (doc_id, is_train). */
+    * (doc_id, is_train). x200's own 90/10 split of the shared bucket, not
+    * the 80/10/10 [[TextAnalysis.splitLabel]]. */
   private def evalSplit(s: SparkSession, d: String): DataFrame =
     TextAnalysis.fingerprintTable(s, d)
-      .select(col("doc_id"), (col("fp") % 100 < 90).as("is_train"))
+      .select(col("doc_id"), (TextAnalysis.fpBucket < 90).as("is_train"))
 
   /** Eval positions whose 7-token prefix class contains a train member
     * — the exact contamination frontier (doc_id, i) over explicit

@@ -1203,9 +1203,11 @@ object Streams {
     // the inverted-file state by union+distinct — assignment is
     // per-vector independent and deterministic, so the fold is
     // idempotent under replay and the converged state equals the batch
-    // index for ANY slicing. The serve-path finish (nprobe=2 probe,
-    // exact cosine in probed lists, top-5) plus oracle SQL are shared
-    // verbatim with x101 ([[graft.operators.Similarity.assignFrozen]] /
+    // index for ANY slicing. The codebook, the assignment, the serve-path
+    // finish (nprobe=2 probe, exact cosine in probed lists, top-5) and the
+    // oracle SQL are x101's own definitions
+    // ([[graft.operators.Similarity.frozenCents]],
+    // [[graft.operators.Similarity.assignFrozen]],
     // [[graft.operators.Similarity.ivfProbeReport]]).
     //
     // Scale: each batch ships (arrivals × 2) assignment rows after a
@@ -1222,18 +1224,14 @@ object Streams {
         // assignment is per-vector deterministic, so the log's distinct
         // is only replay armor
         val ivf = new StateFold.Log(ivfDir, _.distinct())
+        import graft.operators.Similarity.{assignFrozen, frozenCents,
+          ivfProbeReport, withNorm}
         drain(replay(ss, stage)) { batch =>
-          val cents = graft.operators.Similarity
-            .frozenCents(batch.sparkSession, d)
-          val normed = batch
-            .select(col("vec_id"),
-              transform(col("embedding"), _.cast("double")).as("v"))
-            .withColumn("nrm",
-              sqrt(graft.operators.Similarity.dot(col("v"), col("v"))))
-            .select(col("vec_id"), col("v"), col("nrm"))
-          ivf.add(graft.operators.Similarity.assignFrozen(normed, cents))
+          val cents = frozenCents(
+            withNorm(Tables.embeddings(batch.sparkSession, d)))
+          ivf.add(assignFrozen(withNorm(batch), cents, 2))
         }
-        graft.operators.Similarity.ivfProbeReport(ivf.state(ss))
+        ivfProbeReport(ivf.state(ss))
       }
     },
 

@@ -185,6 +185,42 @@ class Round12Spec extends AnyFunSuite {
       s"Artifacts.scala (declare a family there): ${bad.mkString("; ")}")
     // the scan must see the registry's own constructions, or it proves nothing
     patterns.foreach(p => assert(ok.exists(_._3.contains(p)), s"no $p found in Artifacts.scala"))
+
+    // One definition per shared corpus rule: outside oracle SQL (`|`
+    // lines), each rule's Scala form appears only in the body of its
+    // helper, i.e. from the helper's declaration up to the next line
+    // indented no deeper than it.
+    val code = MainSource.code()
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    Seq(
+      ("""col\("fp"\)\s*%\s*100(?!\d)""", "TextAnalysis.scala", "fpBucket"),
+      ("""col\("vec_id"\)\s*%\s*50\s*===\s*0""", "Similarity.scala",
+        "frozenCents"),
+      ("""\*\s*2\.2(?!\d)""", "Mining.scala", "bm25Score")
+    ).foreach { case (rule, file, helper) =>
+      val re = rule.r
+      val hits = code.flatMap { case (f, lines) =>
+        lines.zipWithIndex.collect {
+          case (l, i) if !l.trim.startsWith("|") &&
+              re.findFirstIn(l).isDefined => (f.getName, i)
+        }
+      }
+      val lines = code.find(_._1.getName == file).map(_._2)
+        .getOrElse(fail(s"$file not found"))
+      val start = lines.indexWhere(
+        _.matches(s"""\\s*(private\\S* )?(def|val) $helper\\b.*"""))
+      assert(start >= 0, s"no $helper declared in $file")
+      val end = lines.indexWhere(l => l.trim.nonEmpty &&
+        indent(l) <= indent(lines(start)), start + 1)
+      val (own, copies) = hits.partition { case (f, i) =>
+        f == file && i >= start && (end < 0 || i < end)
+      }
+      val where = copies.map { case (f, i) => s"$f:${i + 1}" }
+      assert(copies.isEmpty, s"`$rule` is written outside $file's $helper " +
+        s"(call the helper): ${where.mkString(", ")}")
+      assert(own.nonEmpty,
+        s"`$rule` not found in $helper, so the scan proves nothing")
+    }
   }
 
   test("x199: the curation run's conservation telescopes, and tokens are conserved into bins") {
